@@ -418,44 +418,93 @@ def run_pipeline(
     write jobs themselves via ``observe`` — zero extra scans, filled
     as {layer/table: {metric: value}} (quality/observe.py; replaces
     the reference's ~10 eager ``.count()`` jobs per run)."""
-    out: dict[str, str] = {}
-    s = plan.config.get("silver", {})
-    silver_path = os.path.join(warehouse, "silver", plan.name)
-    if metrics_out is not None:
-        from nyc_taxi_data_ingestion_spark.quality.observe import write_observed
-
-        metrics_out[f"silver/{plan.name}"] = write_observed(
-            plan.silver, silver_path, partition_by=s.get("partition_by") or []
-        )
-    else:
-        write_partitioned(plan.silver, silver_path, s.get("partition_by") or [])
-    out[f"silver/{plan.name}"] = silver_path
-
+    silver_path = materialize_silver(plan, warehouse, metrics_out)
+    out = {f"silver/{plan.name}": silver_path}
     # gold reads the materialized silver so each mart scans parquet once
     # rather than recomputing the transform chain per mart
     silver_df = spark.read.parquet(silver_path)
     for mart in plan.config.get("gold", []):
-        name = mart["name"]
-        path = os.path.join(warehouse, "gold", name)
-        parts = mart.get("partition_by") or []
-        if incremental and mart.get("materialization") == "incremental":
-            slice_df = _lookback_filter(silver_df, mart["lookback"], parts)
-            gold_df = build_gold_frame(slice_df, mart)
-            overwrite_partitions(spark, gold_df, path, parts)
-        else:
-            gold_df = build_gold_frame(silver_df, mart)
-            if metrics_out is not None:
-                from nyc_taxi_data_ingestion_spark.quality.observe import (
-                    write_observed,
-                )
-
-                metrics_out[f"gold/{name}"] = write_observed(
-                    gold_df, path, partition_by=parts
-                )
-            else:
-                write_partitioned(gold_df, path, parts)
-        out[f"gold/{name}"] = path
+        out[f"gold/{mart['name']}"] = materialize_mart(
+            spark, silver_df, mart, warehouse, incremental, metrics_out
+        )
     return out
+
+
+def _write_layer(
+    df: DataFrame,
+    path: str,
+    parts: list[str],
+    metrics_out: dict[str, dict] | None,
+    key: str,
+) -> None:
+    """Full-refresh write of one layer table; with ``metrics_out`` the
+    write job itself harvests the observed metrics into ``key``."""
+    if metrics_out is None:
+        write_partitioned(df, path, parts)
+    else:
+        from nyc_taxi_data_ingestion_spark.quality.observe import write_observed
+
+        metrics_out[key] = write_observed(df, path, partition_by=parts)
+
+
+def materialize_silver(
+    plan: PipelinePlan,
+    warehouse: str,
+    metrics_out: dict[str, dict] | None = None,
+) -> str:
+    """Write the plan's silver table under ``warehouse`` (partitioned
+    overwrite); returns its path."""
+    path = os.path.join(warehouse, "silver", plan.name)
+    parts = plan.config.get("silver", {}).get("partition_by") or []
+    _write_layer(plan.silver, path, parts, metrics_out, f"silver/{plan.name}")
+    return path
+
+
+def materialize_mart(
+    spark: SparkSession,
+    silver_df: DataFrame,
+    mart: dict,
+    warehouse: str,
+    incremental: bool = False,
+    metrics_out: dict[str, dict] | None = None,
+) -> str:
+    """Materialize ONE gold mart from the materialized silver frame —
+    the gold write path shared by :func:`run_pipeline` and
+    ``runner.run_medallion``. Full refresh overwrites; with
+    ``incremental=True`` a mart declared ``materialization:
+    incremental`` partition-overwrites its lookback slice only (M1).
+    ``metrics_out`` receives the write's observed metrics under
+    ``gold/<name>`` either way. Returns the mart's path."""
+    name = mart["name"]
+    path = os.path.join(warehouse, "gold", name)
+    parts = mart.get("partition_by") or []
+    if not (incremental and mart.get("materialization") == "incremental"):
+        _write_layer(
+            build_gold_frame(silver_df, mart), path, parts, metrics_out,
+            f"gold/{name}",
+        )
+        return path
+    frame = build_gold_frame(
+        _lookback_filter(silver_df, mart["lookback"], parts), mart
+    )
+    if metrics_out is None:
+        overwrite_partitions(spark, frame, path, parts)
+        return path
+    # the partition-scoped write is still a write job — observed
+    # metrics ride it like every other layer's
+    from nyc_taxi_data_ingestion_spark.plans.audit import audit_plan
+    from nyc_taxi_data_ingestion_spark.quality.observe import (
+        attach,
+        standard_metrics,
+    )
+
+    findings = [
+        {"severity": f.severity, "code": f.code} for f in audit_plan(frame)
+    ]
+    frame, obs = attach(frame, standard_metrics(frame))
+    overwrite_partitions(spark, frame, path, parts)
+    metrics_out[f"gold/{name}"] = {**obs.get, "plan_findings": findings}
+    return path
 
 
 # -- curation pipeline compilation -------------------------------------------

@@ -124,10 +124,12 @@ def run_medallion(
     """Compile + materialize a full medallion pipeline as a task graph:
     ``health → compile → silver → gold:<mart>... → quality``.
 
-    Gold marts are independent tasks (parallel in Airflow; sequential
-    here — Spark already parallelizes inside each), each depending on
-    silver; quality depends on silver only, so a broken mart never
-    blocks the DQ report on the data that did land.
+    Gold marts are independent tasks, each depending on silver, and
+    run concurrently like parallel Airflow task instances (see
+    :func:`_run_graph`); quality depends on silver only, so a broken
+    mart never blocks the DQ report on the data that did land. Silver
+    and every mart are written by the same ``compiler`` functions as
+    ``run_pipeline``, so both entry points materialize identically.
 
     Pass ``metrics_out={}`` to harvest the reference's between-step
     logging metrics (row count + per-column null tallies) from the
@@ -137,13 +139,9 @@ def run_medallion(
     import os
 
     from nyc_taxi_data_ingestion_spark.plans.compiler import (
-        _lookback_filter,
-        build_gold_frame,
         compile_pipeline,
-    )
-    from nyc_taxi_data_ingestion_spark.sources.sinks import (
-        overwrite_partitions,
-        write_partitioned,
+        materialize_mart,
+        materialize_silver,
     )
 
     state: dict = {}
@@ -166,57 +164,17 @@ def run_medallion(
             spark, {**cfg, "gold": []}, env_overlay, env
         )
 
-    def _write(df, path: str, parts: list, key: str) -> None:
-        if metrics_out is not None:
-            from nyc_taxi_data_ingestion_spark.quality.observe import (
-                write_observed,
-            )
-
-            metrics_out[key] = write_observed(df, path, partition_by=parts)
-        else:
-            write_partitioned(df, path, parts)
-
     def t_silver() -> None:
-        plan = state["plan"]
-        s = plan.config.get("silver", {})
-        path = os.path.join(warehouse, "silver", plan.name)
-        _write(plan.silver, path, s.get("partition_by") or [],
-               f"silver/{plan.name}")
-        state["silver_path"] = path
+        state["silver_path"] = materialize_silver(
+            state["plan"], warehouse, metrics_out
+        )
 
     def t_gold(mart: dict):
         def _run() -> None:
             silver_df = spark.read.parquet(state["silver_path"])
-            path = os.path.join(warehouse, "gold", mart["name"])
-            parts = mart.get("partition_by") or []
-            if incremental and mart.get("materialization") == "incremental":
-                sl = _lookback_filter(silver_df, mart["lookback"], parts)
-                frame = build_gold_frame(sl, mart)
-                if metrics_out is not None:
-                    # the partition-scoped write is still a write job —
-                    # observed metrics ride it like every other layer's
-                    from nyc_taxi_data_ingestion_spark.plans.audit import (
-                        audit_plan,
-                    )
-                    from nyc_taxi_data_ingestion_spark.quality.observe import (
-                        attach,
-                        standard_metrics,
-                    )
-
-                    findings = [
-                        {"severity": f.severity, "code": f.code}
-                        for f in audit_plan(frame)
-                    ]
-                    frame, obs = attach(frame, standard_metrics(frame))
-                    overwrite_partitions(spark, frame, path, parts)
-                    got = dict(obs.get)
-                    got["plan_findings"] = findings
-                    metrics_out[f"gold/{mart['name']}"] = got
-                else:
-                    overwrite_partitions(spark, frame, path, parts)
-            else:
-                _write(build_gold_frame(silver_df, mart), path, parts,
-                       f"gold/{mart['name']}")
+            materialize_mart(
+                spark, silver_df, mart, warehouse, incremental, metrics_out
+            )
 
         return _run
 

@@ -1966,18 +1966,20 @@ class SnapshotStreamWriter(DataSourceStreamArrowWriter):
             _S._DATA_DIR, f"cs{batchId:08d}-{uuid.uuid4().hex[:8]}"
         )
         commit_abs = os.path.join(self._path, commit_rel)
-        os.makedirs(commit_abs, exist_ok=True)
-        files = []
-        for rel in staged:
-            os.rename(
-                os.path.join(self._path, "_staging", rel),
-                os.path.join(commit_abs, rel),
+        # a commit that fails for good takes its dir with it (Spark
+        # re-runs the batch's tasks from the checkpoint)
+        with _S._staging(self._path) as owned:
+            owned.append(commit_rel)
+            os.makedirs(commit_abs, exist_ok=True)
+            for rel in staged:
+                os.rename(
+                    os.path.join(self._path, "_staging", rel),
+                    os.path.join(commit_abs, rel),
+                )
+            v = _S.commit_staged_stream_batch(
+                self._path, commit_rel, sorted(staged),
+                self._source_id, batchId,
             )
-            files.append(rel)
-        v = _S.commit_staged_stream_batch(
-            self._path, commit_rel, sorted(files),
-            self._source_id, batchId,
-        )
         if v is None:
             # replayed batch: the manifest high-water mark already
             # covers it — this batch's files must NOT land twice

@@ -26,6 +26,21 @@ Design — a minimal Iceberg-shaped commit log, parquet-native:
   file list at planning time). On object storage this is the whole
   point: O(1) listing per read, no eventually-consistent LIST.
 
+Commit protocol: every writer runs ONE loop (:func:`_optimistic`,
+``_COMMIT_RETRIES`` attempts), builds its manifest with ONE builder
+(:func:`_next_manifest`) and lands it in ONE step (:func:`_land`). An
+attempt polls the head, plans, stages its data in fresh per-write dirs
+and lands the next version. The builder carries the table state of its
+base — ``partition_by``, ``commits``, ``stats_cols``, ``stats``,
+``deletes``, ``eq_deletes``, ``schema_log``, ``stream_state``
+(``_STATE_KEYS``) — and the writer overrides only what it changes.
+Cleanup rule: an attempt that loses the race (another version landed
+first) or fails removes the dirs it staged, and the next attempt
+re-plans from the new head; a writer that staged its data once (an
+append) retries the manifest only and removes its dir only if the
+commit fails for good. Expiry's age-guarded GC is left with the
+debris of crashed writers.
+
 Scale shape: manifests are KB-per-commit metadata. Past
 ``_SHARD_INLINE_MAX`` total file entries the manifest SHARDS
 (Iceberg's manifest-list shape): the per-version file state
@@ -209,7 +224,7 @@ def _resolve_manifest(
     selective scan's planning cost is O(surviving shards), not
     O(table) — Iceberg's manifest-list partition summaries. The
     result is a PRUNED VIEW (marked ``_pruned``): it must never seed
-    a commit's shard reuse (:func:`_commit_manifest_any` refuses).
+    a commit's shard reuse (:func:`_land` refuses).
     Skipping disables itself under a schema log (predicates arrive in
     logical names, hulls are recorded in write-time physical names).
     ``plan_out`` (optional dict) receives {total_shards,
@@ -690,19 +705,19 @@ def _record_union_schema(
         manifest.pop("partition_schema_b64", None)
 
 
-def _commit_manifest_any(
-    path: str, version: int, manifest: dict, reuse_base: dict | None = None
-) -> bool:
-    """THE manifest-landing step every writer routes through: below
-    ``_SHARD_INLINE_MAX`` total file entries the manifest lands inline
-    (v1 — small tables pay nothing, old manifests stay readable
-    forever); above it the file-level state moves into shards. Shards
-    of ``reuse_base`` (the RESOLVED parent/target manifest) whose
-    covered entries ride through unchanged — same file lists, same
-    recorded stats, same delete vectors — are referenced as-is; only
-    the residual (typically: this commit's own files) becomes one new
-    shard. That makes an append's metadata write O(the commit): the
-    very property Iceberg's manifest list exists for."""
+def _land(path: str, manifest: dict, reuse_base: dict | None = None) -> int:
+    """THE manifest-landing step every writer routes through; returns
+    the landed version, or raises :class:`ConcurrentSnapshotError` if
+    another writer took the number first. Below ``_SHARD_INLINE_MAX``
+    total file entries the manifest lands inline (v1 — small tables
+    pay nothing, old manifests stay readable forever); above it the
+    file-level state moves into shards. Shards of ``reuse_base`` (the
+    RESOLVED parent/target manifest) whose covered entries ride
+    through unchanged — same file lists, same recorded stats, same
+    delete vectors — are referenced as-is; only the residual
+    (typically: this commit's own files) becomes one new shard. That
+    makes an append's metadata write O(the commit): the very property
+    Iceberg's manifest list exists for."""
     if manifest.get("_pruned") or (reuse_base or {}).get("_pruned"):
         # a shard-PRUNED view is a partial file inventory: committing
         # from it would silently drop every skipped shard's files —
@@ -726,53 +741,57 @@ def _commit_manifest_any(
         len(fs) for fs in deletes.values()
     )
     if total <= _shard_inline_max():
-        if "shards" in manifest:
-            manifest = {k: v for k, v in manifest.items() if k != "shards"}
-        return _commit_manifest(path, version, manifest)
-    base = reuse_base or {}
-    base_commits = base.get("commits") or {}
-    base_stats = base.get("stats") or {}
-    base_deletes = base.get("deletes") or {}
-    reused: list[dict] = []
-    covered_c: set[str] = set()
-    covered_d: set[str] = set()
-    for d in base.get("shards") or []:
-        crels = d.get("commits") or []
-        drels = d.get("deletes") or []
-        if covered_c.intersection(crels) or covered_d.intersection(drels):
-            continue  # an earlier shard already covers an entry
-        ok = all(
-            rel in commits
-            and commits[rel] == base_commits.get(rel)
-            and (stats.get(rel) or {}) == (base_stats.get(rel) or {})
-            for rel in crels
-        ) and all(
-            drel in deletes and deletes[drel] == base_deletes.get(drel)
-            for drel in drels
-        )
-        if ok:
-            reused.append(d)
-            covered_c.update(crels)
-            covered_d.update(drels)
-    res_c = {r: fs for r, fs in commits.items() if r not in covered_c}
-    res_d = {r: fs for r, fs in deletes.items() if r not in covered_d}
-    descriptors = list(reused)
-    if res_c or res_d:
-        descriptors.append(
-            _write_shard(
-                path,
-                res_c,
-                {r: stats[r] for r in res_c if r in stats},
-                res_d,
+        out = {k: v for k, v in manifest.items() if k != "shards"}
+    else:
+        base = reuse_base or {}
+        base_commits = base.get("commits") or {}
+        base_stats = base.get("stats") or {}
+        base_deletes = base.get("deletes") or {}
+        reused: list[dict] = []
+        covered_c: set[str] = set()
+        covered_d: set[str] = set()
+        for d in base.get("shards") or []:
+            crels = d.get("commits") or []
+            drels = d.get("deletes") or []
+            if covered_c.intersection(crels) or covered_d.intersection(drels):
+                continue  # an earlier shard already covers an entry
+            ok = all(
+                rel in commits
+                and commits[rel] == base_commits.get(rel)
+                and (stats.get(rel) or {}) == (base_stats.get(rel) or {})
+                for rel in crels
+            ) and all(
+                drel in deletes and deletes[drel] == base_deletes.get(drel)
+                for drel in drels
             )
+            if ok:
+                reused.append(d)
+                covered_c.update(crels)
+                covered_d.update(drels)
+        res_c = {r: fs for r, fs in commits.items() if r not in covered_c}
+        res_d = {r: fs for r, fs in deletes.items() if r not in covered_d}
+        descriptors = list(reused)
+        if res_c or res_d:
+            descriptors.append(
+                _write_shard(
+                    path,
+                    res_c,
+                    {r: stats[r] for r in res_c if r in stats},
+                    res_d,
+                )
+            )
+        out = {
+            k: v
+            for k, v in manifest.items()
+            if k not in ("commits", "stats", "deletes", "shards")
+        }
+        out["shards"] = descriptors
+    version = manifest["version"]
+    if not _commit_manifest(path, version, out):
+        raise ConcurrentSnapshotError(
+            f"v{version} at {path} was taken by another writer"
         )
-    out = {
-        k: v
-        for k, v in manifest.items()
-        if k not in ("commits", "stats", "deletes", "shards")
-    }
-    out["shards"] = descriptors
-    return _commit_manifest(path, version, out)
+    return version
 
 
 def list_snapshots(path: str, resolve: bool = True) -> list[dict[str, Any]]:
@@ -866,6 +885,17 @@ def _load_manifest(
         path, _load_manifest_raw(path, version), prune=prune,
         plan_out=plan_out,
     )
+
+
+# a footer read is ~ms of GIL-released I/O: up to ~a thousand files, a
+# driver-side THREAD POOL finishes in tens of ms, while a Spark
+# mapInPandas job pays task scheduling plus a Python-worker spawn per
+# slice (measured r12: one 18-file commit's stats job cost 1.5-2.5 s of
+# pure overhead, ~70 exec-s across 50 tasks). Stats collection fans out
+# to the cluster only for a commit wider than this many files (a 100 TB
+# table reaches ~800k files across MANY commits, but a single commit in
+# the thousands of files should use the cluster)
+_STATS_DRIVER_MAX = 1024
 
 
 def _collect_file_stats(
@@ -1016,20 +1046,10 @@ def _collect_file_stats(
                 )
         return out
 
-    # a footer read is ~ms of GIL-released I/O: up to ~a thousand
-    # files, a driver-side THREAD POOL finishes in tens of ms, while a
-    # Spark mapInPandas job pays task scheduling plus a Python-worker
-    # spawn per slice (measured r12: one 18-file commit's stats job
-    # cost 1.5-2.5 s of pure overhead, ~70 exec-s across 50 tasks, and
-    # stats-enabled multi-commit queries paid it per commit). Fan out
-    # only when the commit is genuinely wide — beyond
-    # SPARK_GRAFT_STATS_DRIVER_MAX files (default 1024; a 100 TB table
-    # reaches ~800k files across MANY commits, but a single commit in
-    # the thousands of files should use the cluster). spark=None
-    # (commit_staged_files from a python-DataSource writer's commit
-    # hook, where no session is reachable) always stays driver-side.
-    driver_max = int(os.environ.get("SPARK_GRAFT_STATS_DRIVER_MAX", "1024"))
-    if spark is None or len(files) <= max(driver_max, 8):
+    # spark=None (commit_staged_files from a python-DataSource writer's
+    # commit hook, where no session is reachable) always stays
+    # driver-side; see _STATS_DRIVER_MAX for the fan-out threshold
+    if spark is None or len(files) <= max(_STATS_DRIVER_MAX, 8):
         if len(files) <= 8:
             rows = [t for rel in files for t in _file_stats(rel)]
         else:
@@ -1071,12 +1091,145 @@ def _collect_file_stats(
     return stats
 
 
+# The commit protocol (see the module docstring): one optimistic loop,
+# one manifest builder, one landing step (_land).
+_COMMIT_RETRIES = 5
+
+# the TABLE STATE a version inherits from the one it is built on; every
+# other manifest key (version/parent/operation/timestamp, ref, the
+# recorded union schema, per-operation provenance) is per-version
+_STATE_KEYS = (
+    "partition_by",
+    "commits",
+    "stats_cols",
+    "stats",
+    "deletes",
+    "eq_deletes",
+    "schema_log",
+    "stream_state",
+)
+
+
+def _head(path: str, branch: str | None = None) -> int | None:
+    """The head a commit on ``branch`` (main when None) builds on."""
+    if branch is not None:
+        return _branch_head(path, branch)
+    return current_version(path)
+
+
+@_contextlib.contextmanager
+def _staging(path: str):
+    """Yield the list a writer registers its staged dirs in (relative
+    to ``path``, BEFORE writing them): if the block raises — a lost
+    race or any failure — every one is removed, since nothing committed
+    them. Expiry's age-guarded GC is left with crashed writers only.
+    An interrupt (KeyboardInterrupt, SystemExit) is not caught: it may
+    arrive after the manifest linked, when the dirs are committed."""
+    staged: list[str] = []
+    try:
+        yield staged
+    except Exception:
+        for rel in staged:
+            shutil.rmtree(os.path.join(path, rel), ignore_errors=True)
+        raise
+
+
+def _optimistic(path: str, what: str, attempt) -> Any:
+    """THE commit loop every writer runs: up to ``_COMMIT_RETRIES``
+    calls of ``attempt(staged)``, which plans against the head it
+    polls, stages what it writes (see :func:`_staging`) and lands one
+    manifest. A :class:`ConcurrentSnapshotError` (or a manifest that
+    vanished under a read) while another version landed is a LOST
+    RACE: the attempt's staged dirs go and the next attempt re-plans
+    from the new head. Raised with nothing landed, it is the caller's
+    own stale base (an ``expected_parent`` that no longer holds) and
+    propagates."""
+    for _ in range(_COMMIT_RETRIES):
+        seen = set(_version_numbers(path))
+        try:
+            with _staging(path) as staged:
+                return attempt(staged)
+        except (ConcurrentSnapshotError, FileNotFoundError):
+            if not set(_version_numbers(path)) - seen:
+                raise
+    raise ConcurrentSnapshotError(
+        f"{what} at {path} lost {_COMMIT_RETRIES} optimistic races — a "
+        f"writer loop is outrunning this one"
+    )
+
+
+def _next_manifest(
+    path: str,
+    base: dict,
+    parent: int | None,
+    operation: str,
+    ref: str | None = None,
+    **changes: Any,
+) -> dict:
+    """THE version-manifest builder: the next version after ``parent``
+    on ``ref`` (main when None), carrying ``base``'s table state with
+    ``changes`` applied — a None or empty state value drops its key;
+    ``partition_by`` and ``commits`` are always present. The version
+    number is drawn BEFORE the head is re-checked: a commit landing
+    earlier has moved the head (raises :class:`ConcurrentSnapshotError`),
+    and one landing later can only take this same number, so the
+    filename CAS in :func:`_land` doubles as a CAS on ``parent``."""
+    version = _next_version(path)
+    if _head(path, ref) != parent:
+        raise ConcurrentSnapshotError(
+            f"head moved past v{parent} at {path} during the commit"
+        )
+    state = {k: base.get(k) for k in _STATE_KEYS}
+    state.update(changes)
+    manifest = {
+        k: v
+        for k, v in state.items()
+        if v is not None and (v or k not in _STATE_KEYS)
+    }
+    manifest.update(
+        version=version,
+        parent=parent,
+        operation=operation,
+        timestamp=time.time(),
+        partition_by=state["partition_by"] or [],
+        commits=state["commits"] or {},
+    )
+    if ref is not None:
+        manifest["ref"] = ref
+    return manifest
+
+
+def _stage_frame(
+    df: DataFrame,
+    path: str,
+    head: int | None,
+    staged: list[str],
+    partition_by: list[str] | None = None,
+) -> tuple[str, list[str]]:
+    """Write ``df`` into a fresh commit dir for a commit on top of
+    ``head`` and return ``(rel, files)``. The dir is unique PER WRITE
+    (``data/c{head+1}-{uuid}``; the version in the name is cosmetic,
+    nothing parses it), so racing writers never share one, and it is
+    registered in ``staged`` before a byte lands."""
+    rel = os.path.join(
+        _DATA_DIR, f"c{(head or 0) + 1:08d}-{uuid.uuid4().hex[:8]}"
+    )
+    staged.append(rel)
+    writer = df.write.mode("error")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(os.path.join(path, rel))
+    files, _n = _staged_parquet_files(
+        os.path.join(path, rel), count_rows=False
+    )
+    return rel, files
+
+
 def snapshot_write(
     df: DataFrame,
     path: str,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    max_commit_retries: int = 5,
     expected_parent: int | _ExpectNoParent | None = None,
     stream_state: dict[str, int] | None = None,
     stats_cols: list[str] | None = None,
@@ -1126,50 +1279,27 @@ def snapshot_write(
     """
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-    # None means INHERIT the table's recorded spec (commit_staged_files
-    # resolves it, same contract as stats_cols); [] is an explicit
-    # reset. The local list below only drives this write's layout.
-    declared_partition_by = partition_by
-    partition_by = partition_by or []
-    os.makedirs(_snap_root(path), exist_ok=True)
-
-    cur = (
-        _branch_head(path, branch)
-        if branch is not None
-        else current_version(path)
-    )
+    cur = _head(path, branch)
     _check_expected_parent(path, cur, expected_parent)
-    # the commit dir is unique PER WRITE, never shared: two racers
-    # targeting the same version number must never share a directory —
-    # an orphaned dir (failed commit) is left untouched (it may be
-    # ANOTHER writer's already-committed data) and swept by expiry's
-    # age-guarded GC once it is provably unreferenced. The version in
-    # the name is the head+1 at staging time — cosmetic (nothing
-    # parses it): a lost optimistic race retries the MANIFEST only,
-    # the staged data is never rewritten.
-    commit_rel = os.path.join(
-        _DATA_DIR, f"c{(cur or 0) + 1:08d}-{uuid.uuid4().hex[:8]}"
-    )
-    commit_abs = os.path.join(path, commit_rel)
-    writer = df.write.mode("error")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(commit_abs)
-
-    files, _n = _staged_parquet_files(commit_abs, count_rows=False)
-    return commit_staged_files(
-        path,
-        commit_rel,
-        files,
-        mode=mode,
-        partition_by=declared_partition_by,
-        max_commit_retries=max_commit_retries,
-        expected_parent=expected_parent,
-        stream_state=stream_state,
-        stats_cols=stats_cols,
-        spark=df.sparkSession,
-        branch=branch,
-    )
+    # the data is staged once: a lost optimistic race retries the
+    # MANIFEST only, and a commit that fails for good removes the dir.
+    # partition_by=None means INHERIT the table's recorded spec
+    # (commit_staged_files resolves it, same contract as stats_cols);
+    # only a given list drives this write's layout
+    with _staging(path) as staged:
+        commit_rel, files = _stage_frame(df, path, cur, staged, partition_by)
+        return commit_staged_files(
+            path,
+            commit_rel,
+            files,
+            mode=mode,
+            partition_by=partition_by,
+            expected_parent=expected_parent,
+            stream_state=stream_state,
+            stats_cols=stats_cols,
+            spark=df.sparkSession,
+            branch=branch,
+        )
 
 
 def snapshot_write_many(
@@ -1200,40 +1330,24 @@ def snapshot_write_many(
         raise ValueError("modes must match frames")
     from nyc_taxi_data_ingestion_spark.parallel import par_pool_map
 
-    os.makedirs(_snap_root(path), exist_ok=True)
-    cur = current_version(path)
-    staged = [
-        os.path.join(
-            _DATA_DIR,
-            f"c{(cur or 0) + i + 1:08d}-{uuid.uuid4().hex[:8]}",
+    cur = current_version(path) or 0
+    staged = par_pool_map(
+        lambda i: _stage_frame(frames[i], path, cur + i, [], partition_by),
+        range(len(frames)),
+        max_workers=4,
+    )
+    return [
+        commit_staged_files(
+            path,
+            rel,
+            files,
+            mode=modes[i],
+            partition_by=partition_by,
+            stats_cols=stats_cols,
+            spark=frames[i].sparkSession,
         )
-        for i in range(len(frames))
+        for i, (rel, files) in enumerate(staged)
     ]
-
-    def _stage(i: int):
-        writer = frames[i].write.mode("error")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(path, staged[i]))
-        return _staged_parquet_files(
-            os.path.join(path, staged[i]), count_rows=False
-        )[0]
-
-    file_lists = par_pool_map(_stage, range(len(frames)), max_workers=4)
-    versions = []
-    for i, (rel, files) in enumerate(zip(staged, file_lists)):
-        versions.append(
-            commit_staged_files(
-                path,
-                rel,
-                files,
-                mode=modes[i],
-                partition_by=partition_by,
-                stats_cols=stats_cols,
-                spark=frames[i].sparkSession,
-            )
-        )
-    return versions
 
 
 def commit_staged_stream_batch(
@@ -1245,41 +1359,31 @@ def commit_staged_stream_batch(
     partition_by: list[str] | None = None,
 ) -> int | None:
     """:func:`commit_staged_files` under the exactly-once streaming
-    protocol (streaming.ingest.commit_stream_batch's loop, for files
-    already staged by a python-DataSource stream writer's tasks): the
-    head manifest's ``stream_state[source_id]`` is the last batch this
-    source applied — a batch at or below it is a replay, skipped
-    (returns None; the caller drops its staged files). Otherwise the
-    append commits with the head CAS and the advanced marker in the
-    SAME manifest, so marker-check and data-write are one atomic
-    commit."""
-    for _ in range(5):
+    protocol (streaming.ingest.commit_stream_batch and the
+    python-DataSource stream writer both commit through here, with the
+    micro-batch already staged): the head manifest's
+    ``stream_state[source_id]`` is the last batch this source applied
+    — a batch at or below it is a replay, skipped (returns None; the
+    caller drops its staged files). Otherwise the append commits with
+    the head CAS and the advanced marker in the SAME manifest, so
+    marker-check and data-write are one atomic commit; a lost race
+    re-reads the marker and re-lands the same files."""
+
+    def attempt(_staged):
         head = current_version(path)
-        try:
-            marks = stream_state(path, head)
-        except FileNotFoundError:
-            continue  # head's manifest expired under us: re-poll
-        if marks.get(source_id, -1) >= batch_id:
+        if stream_state(path, head).get(source_id, -1) >= batch_id:
             return None
-        try:
-            return commit_staged_files(
-                path,
-                commit_rel,
-                files,
-                mode="append",
-                partition_by=partition_by,
-                max_commit_retries=1,
-                expected_parent=(
-                    head if head is not None else EXPECT_NO_PARENT
-                ),
-                stream_state={source_id: batch_id},
-            )
-        except ConcurrentSnapshotError:
-            continue
-    raise ConcurrentSnapshotError(
-        f"stream batch {batch_id} ({source_id}) lost 5 commit races at "
-        f"{path} — a writer loop is outrunning this stream"
-    )
+        return commit_staged_files(
+            path,
+            commit_rel,
+            files,
+            mode="append",
+            partition_by=partition_by,
+            expected_parent=head if head is not None else EXPECT_NO_PARENT,
+            stream_state={source_id: batch_id},
+        )
+
+    return _optimistic(path, f"stream batch {batch_id} ({source_id})", attempt)
 
 
 def _check_expected_parent(path, cur, expected_parent) -> None:
@@ -1300,7 +1404,6 @@ def commit_staged_files(
     files: list[str],
     mode: str = "append",
     partition_by: list[str] | None = None,
-    max_commit_retries: int = 5,
     expected_parent: int | _ExpectNoParent | None = None,
     stream_state: dict[str, int] | None = None,
     stats_cols: list[str] | None = None,
@@ -1321,23 +1424,23 @@ def commit_staged_files(
 
     Retries are MANIFEST-ONLY: a lost optimistic race re-polls the
     head and re-lands the same staged files under the next version —
-    data is never rewritten. ``spark=None`` collects file stats
-    driver-side sequentially (footer reads are ~ms each); pass a
-    session to fan wide commits out. ``deletes_add`` registers
-    already-staged positional delete vectors IN THE SAME atomic
-    commit as the data files (merge-on-read MERGE: mask + append is
-    one manifest or nothing) — append mode only, since an overwrite's
-    fresh file set has nothing to mask. ``eq_deletes_add`` registers
-    already-staged EQUALITY delete files the same way — entries are
-    ``{rel: {"files": [...], "cols": [key cols]}}``; the commit loop
-    stamps each with ``applies_to`` (the parent state's data dirs) so
-    the delete scopes to rows that existed before it, race-proof
-    under CAS retries (recomputed per attempt — data staged in the
-    SAME commit is never its own victim). ``commit_rel=None`` with
-    ``files=[]`` makes a METADATA-ONLY commit (a pure equality
-    delete: zero table reads, zero data writes). ``operation``
-    overrides the recorded op name (e.g. 'merge') without changing
-    semantics. Other parameters as :func:`snapshot_write`."""
+    data is never rewritten, and the staged dir stays the caller's.
+    ``spark=None`` collects file stats driver-side (footer reads are
+    ~ms each); pass a session to fan wide commits out. ``deletes_add``
+    registers already-staged positional delete vectors IN THE SAME
+    atomic commit as the data files (merge-on-read MERGE: mask +
+    append is one manifest or nothing) — append mode only, since an
+    overwrite's fresh file set has nothing to mask. ``eq_deletes_add``
+    registers already-staged EQUALITY delete files the same way —
+    entries are ``{rel: {"files": [...], "cols": [key cols]}}``; the
+    commit loop stamps each with ``applies_to`` (the parent state's
+    data dirs) so the delete scopes to rows that existed before it,
+    race-proof under CAS retries (recomputed per attempt — data staged
+    in the SAME commit is never its own victim). ``commit_rel=None``
+    with ``files=[]`` makes a METADATA-ONLY commit (a pure delete:
+    zero data writes). ``operation`` overrides the recorded op name
+    (e.g. 'merge') without changing semantics. Other parameters as
+    :func:`snapshot_write`."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
     if (deletes_add or eq_deletes_add) and mode != "append":
@@ -1368,25 +1471,15 @@ def commit_staged_files(
     entry_log: list | None = None
     if branch is not None:
         _load_branch_marker(path, branch)  # must exist, loud otherwise
-    for _ in range(max_commit_retries):
+
+    def attempt(_staged):
+        nonlocal entry_log
         # a branch commit's lineage base (state carry + CAS) is the
         # BRANCH head; numbering stays global either way — version
         # numbers are one shared sequence, ``parent`` is the lineage
-        cur = (
-            _branch_head(path, branch)
-            if branch is not None
-            else current_version(path)
-        )
+        cur = _head(path, branch)
         _check_expected_parent(path, cur, expected_parent)
-        version = _next_version(path)
-        try:
-            parent = _load_manifest(path, cur) if cur is not None else {}
-        except FileNotFoundError:
-            # cur's manifest expired between the head poll and this
-            # read — the head has necessarily moved on, so this is a
-            # lost optimistic race, not an error: re-poll and retry
-            # (with a CAS the re-polled head fails the check cleanly)
-            continue
+        parent = _load_manifest(path, cur) if cur is not None else {}
         parent_log = parent.get("schema_log") or []
         if entry_log is None:
             entry_log = parent_log
@@ -1397,41 +1490,29 @@ def commit_staged_files(
                 f"were written against the pre-evolution schema; "
                 f"re-read the table and re-stage"
             )
-        commits: dict[str, list[str]] = {}
-        stats: dict[str, dict[str, dict[str, list]]] = {}
-        deletes: dict[str, list[str]] = {}
-        eq_deletes: dict[str, dict] = {}
-        schema_log: list[dict] = []
-        if mode == "append" and cur is not None:
-            commits.update(parent["commits"])
-            # carried commits keep their recorded bounds AND their
-            # positional delete vectors (the carried files still hold
-            # the deleted rows); an overwrite resets both with the
-            # file set. The schema log rides with the commits it
-            # applies to: carried dirs still need their renames/drops
-            # replayed, while an overwrite's fresh files (written from
-            # the logical frame) have the evolution materialized, so
-            # the log resets with the file set.
-            stats.update(parent.get("stats") or {})
-            deletes.update(parent.get("deletes") or {})
-            eq_deletes.update(parent.get("eq_deletes") or {})
-            schema_log = list(parent.get("schema_log") or [])
-        deletes.update(deletes_add or {})
-        if eq_deletes_add:
-            # applies_to = the PARENT state's data dirs, captured per
-            # attempt: a CAS retry re-scopes against the new parent, so
-            # concurrently-committed rows stay in scope and data staged
-            # in THIS commit (commit_rel) never masks itself — the
-            # Iceberg sequence-number rule in dir-list form
-            applies = sorted(
-                r for r, fs in (parent.get("commits") or {}).items() if fs
-            )
-            for drel, ent in eq_deletes_add.items():
-                eq_deletes[drel] = {
-                    "files": sorted(ent["files"]),
-                    "cols": list(ent["cols"]),
-                    "applies_to": applies,
-                }
+        # an append carries the parent's state: its commits keep their
+        # recorded bounds AND their delete files (the carried files
+        # still hold the deleted rows), and the schema log rides with
+        # the commits it applies to. An overwrite's fresh files (written
+        # from the logical frame) reset all of it with the file set.
+        base = parent if mode == "append" else {}
+        commits = dict(base.get("commits") or {})
+        stats = dict(base.get("stats") or {})
+        eq_deletes = dict(base.get("eq_deletes") or {})
+        # applies_to = the PARENT state's data dirs, captured per
+        # attempt: a CAS retry re-scopes against the new parent, so
+        # concurrently-committed rows stay in scope and data staged in
+        # THIS commit (commit_rel) never masks itself — the Iceberg
+        # sequence-number rule in dir-list form
+        applies = sorted(
+            r for r, fs in (parent.get("commits") or {}).items() if fs
+        )
+        for drel, ent in (eq_deletes_add or {}).items():
+            eq_deletes[drel] = {
+                "files": sorted(ent["files"]),
+                "cols": list(ent["cols"]),
+                "applies_to": applies,
+            }
         if commit_rel is not None:
             commits[commit_rel] = sorted(files)
 
@@ -1445,11 +1526,6 @@ def commit_staged_files(
             if stats_cols is not None
             else parent.get("stats_cols") or []
         )
-        effective_partition_by = (
-            partition_by
-            if partition_by is not None
-            else parent.get("partition_by") or []
-        )
         if effective_stats_cols and files and commit_rel is not None:
             key = tuple(effective_stats_cols)
             if key not in stats_cache:
@@ -1457,44 +1533,36 @@ def commit_staged_files(
                     spark, commit_abs, files, effective_stats_cols
                 )
             stats[commit_rel] = stats_cache[key]
+        # recorded bounds describe FILES, not the property: an append
+        # that resets stats_cols=[] stops collecting for NEW files but
+        # keeps the carried files' bounds — dropping them silently
+        # turned every later scan unprunable AND broke shard reuse
+        # (stats mismatch → full O(table) metadata rewrite on the next
+        # commit; found by tools/metadata_stress.py, r11)
+        manifest = _next_manifest(
+            path,
+            base,
+            cur,
+            operation or mode,
+            ref=branch,
+            partition_by=(
+                partition_by
+                if partition_by is not None
+                else parent.get("partition_by")
+            ),
+            commits=commits,
+            stats_cols=effective_stats_cols,
+            stats=stats,
+            deletes={**(base.get("deletes") or {}), **(deletes_add or {})},
+            eq_deletes=eq_deletes,
+            stream_state={
+                **(parent.get("stream_state") or {}),
+                **(stream_state or {}),
+            },
+        )
+        return _land(path, manifest, reuse_base=parent)
 
-        merged_state = dict(parent.get("stream_state") or {})
-        merged_state.update(stream_state or {})
-        manifest = {
-            "version": version,
-            "parent": cur,
-            "operation": operation or mode,
-            "timestamp": time.time(),
-            "partition_by": effective_partition_by,
-            "commits": commits,
-        }
-        if branch is not None:
-            manifest["ref"] = branch
-        if effective_stats_cols:
-            manifest["stats_cols"] = effective_stats_cols
-        if stats:
-            # recorded bounds describe FILES, not the property: an
-            # append that resets stats_cols=[] stops collecting for
-            # NEW files but must not drop the carried files' bounds —
-            # doing so silently turned every later scan unprunable AND
-            # broke shard reuse (stats mismatch → full O(table)
-            # metadata rewrite on the next commit; found by
-            # tools/metadata_stress.py, r11)
-            manifest["stats"] = stats
-        if deletes:
-            manifest["deletes"] = deletes
-        if eq_deletes:
-            manifest["eq_deletes"] = eq_deletes
-        if schema_log:
-            manifest["schema_log"] = schema_log
-        if merged_state:
-            manifest["stream_state"] = merged_state
-        if _commit_manifest_any(path, version, manifest, reuse_base=parent):
-            return version
-    raise ConcurrentSnapshotError(
-        f"snapshot commit lost {max_commit_retries} optimistic-concurrency "
-        f"races at {path} — a writer loop is outrunning this one"
-    )
+    return _optimistic(path, "snapshot commit", attempt)
 
 
 def _atomic_link_new(dest: str, blob: str) -> bool:
@@ -1797,7 +1865,8 @@ def snapshot_fast_forward(path: str, name: str) -> int:
             appends_only = False
             break
         v = raw.get("parent")
-    for _ in range(5):
+
+    def attempt(_staged):
         main_head = current_version(path)
         if main_head != base:
             raise ConcurrentSnapshotError(
@@ -1806,26 +1875,17 @@ def snapshot_fast_forward(path: str, name: str) -> int:
                 f"verdict covers a state main no longer has; re-fork "
                 f"from the new head and re-stage"
             )
-        version = _next_version(path)
-        manifest = {
-            "version": version,
-            "parent": main_head,
-            "operation": "fast-forward",
-            "appends_only": appends_only,
-            "published_from": name,
-            "timestamp": time.time(),
-            "partition_by": bm.get("partition_by") or [],
-            "commits": bm["commits"],
-        }
-        for k in ("stats_cols", "stats", "deletes", "eq_deletes",
-                  "schema_log", "stream_state"):
-            if bm.get(k):
-                manifest[k] = bm[k]
-        if _commit_manifest_any(path, version, manifest, reuse_base=bm):
-            return version
-    raise ConcurrentSnapshotError(
-        f"fast-forward of {name!r} at {path} lost 5 optimistic races"
-    )
+        manifest = _next_manifest(
+            path,
+            bm,
+            main_head,
+            "fast-forward",
+            appends_only=appends_only,
+            published_from=name,
+        )
+        return _land(path, manifest, reuse_base=bm)
+
+    return _optimistic(path, f"fast-forward of {name!r}", attempt)
 
 
 def write_audit_publish(
@@ -2574,27 +2634,38 @@ def _read_commits(
         return _union_commit_frames(
             spark, path, commits, tag=False, schema_log=schema_log
         )
-    tagged = _tagged_commits(spark, path, commits, schema_log=schema_log)
-    out = _apply_delete_vectors(spark, path, tagged, deletes)
-    out = _apply_eq_deletes(spark, path, out, eq_deletes)
-    return out.drop("__snap_file", "__snap_pos", "__snap_rel")
+    state = {
+        "commits": commits,
+        "deletes": deletes,
+        "schema_log": schema_log,
+        "eq_deletes": eq_deletes,
+    }
+    return _live_rows(spark, path, state).drop(*_TAG_COLS)
 
 
-def _tagged_commits(
-    spark: SparkSession,
-    path: str,
-    commits: dict[str, list[str]],
-    schema_log: list[dict] | None = None,
-) -> DataFrame:
-    """:func:`_read_commits` with row provenance attached: ``__snap_file``
-    (data file path relative to the table root — the identity delete
-    vectors key on) and ``__snap_pos`` (0-based row position within the
-    file, Spark's parquet ``_metadata.row_index``). Both come from the
-    scanner itself, so they are exact at any parallelism — the same
-    (file, pos) identity Iceberg v2 positional deletes use."""
-    return _union_commit_frames(
-        spark, path, commits, tag=True, schema_log=schema_log
+# row provenance of a tagged read: ``__snap_file`` (data file path
+# relative to the table root — the identity delete vectors key on),
+# ``__snap_pos`` (0-based row position within the file, Spark's parquet
+# ``_metadata.row_index``) and ``__snap_rel`` (the commit dir). All come
+# from the scanner itself, so they are exact at any parallelism — the
+# same (file, pos) identity Iceberg v2 positional deletes use.
+_TAG_COLS = ("__snap_file", "__snap_pos", "__snap_rel")
+
+
+def _live_rows(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
+    """The LIVE rows of a manifest's state — positional delete vectors
+    and equality deletes applied — with the :data:`_TAG_COLS`
+    provenance kept: the read every MoR writer plans against, and the
+    deletes-bearing branch of :func:`_read_commits`."""
+    tagged = _union_commit_frames(
+        spark,
+        path,
+        manifest["commits"],
+        tag=True,
+        schema_log=manifest.get("schema_log"),
     )
+    live = _apply_delete_vectors(spark, path, tagged, manifest.get("deletes"))
+    return _apply_eq_deletes(spark, path, live, manifest.get("eq_deletes"))
 
 
 def _union_commit_frames(
@@ -2672,8 +2743,8 @@ def _apply_delete_vectors(
     tagged: DataFrame,
     deletes: dict[str, list[str]] | None,
 ) -> DataFrame:
-    """Anti-join a :func:`_tagged_commits` frame against the manifest's
-    positional delete vectors. The delete side BROADCASTS: merge-on-read
+    """Anti-join a tagged frame against the manifest's positional
+    delete vectors. The delete side BROADCASTS: merge-on-read
     is for scattered row-level deletes between compactions, so vector
     volume is bounded by compaction cadence, not table size — when
     vectors grow large, :func:`snapshot_compact` materializes them and
@@ -2705,8 +2776,8 @@ def _apply_eq_deletes(
     tagged: DataFrame,
     eq_deletes: dict[str, dict] | None,
 ) -> DataFrame:
-    """Anti-join a :func:`_tagged_commits` frame against the manifest's
-    EQUALITY delete files — Iceberg v2's second delete flavor: each
+    """Anti-join a tagged frame against the manifest's EQUALITY
+    delete files — Iceberg v2's second delete flavor: each
     entry is a small parquet of key rows written with ZERO table reads
     (:func:`snapshot_delete_eq`), scoped to the data commit dirs that
     existed when it committed (``applies_to``, the sequence-number
@@ -2796,11 +2867,11 @@ def snapshot_merge(
     )
 
     upd = updates.withColumn("__upd", F.lit(0))
+
     # the commit itself carries an expected_parent CAS, so a writer
     # landing between planning and the manifest link can never make
-    # this merge clobber data it didn't read; with expected_version
-    # unset, a lost race re-plans the merge from the new head
-    for _ in range(5):
+    # this merge clobber data it didn't read
+    def attempt(_staged):
         head = current_version(path)
         if expected_version is not None and head != expected_version:
             raise ConcurrentSnapshotError(
@@ -2818,26 +2889,19 @@ def snapshot_merge(
             merged_src, keys, order_by=f"{order_col} DESC",
             tie_breakers=["__upd"],
         ).drop("__upd")
-        try:
-            return snapshot_write(
-                merged,
-                path,
-                mode="overwrite",
-                partition_by=(
-                    partition_by
-                    if partition_by is not None or head is None
-                    else _load_manifest(path, head).get("partition_by")
-                ),
-                expected_parent=head if head is not None else EXPECT_NO_PARENT,
-            )
-        except ConcurrentSnapshotError:
-            if expected_version is not None:
-                raise
-            continue
-    raise ConcurrentSnapshotError(
-        f"merge at {path} lost 5 re-plan races — a writer loop is "
-        f"outrunning this one"
-    )
+        return snapshot_write(
+            merged,
+            path,
+            mode="overwrite",
+            partition_by=(
+                partition_by
+                if partition_by is not None or head is None
+                else _load_manifest(path, head).get("partition_by")
+            ),
+            expected_parent=head if head is not None else EXPECT_NO_PARENT,
+        )
+
+    return _optimistic(path, "merge", attempt)
 
 
 def snapshot_delete(
@@ -2854,7 +2918,8 @@ def snapshot_delete(
     rather than resurrecting rows it added. Completes the DML
     triangle with :func:`snapshot_write` (INSERT/overwrite) and
     :func:`snapshot_merge` (UPDATE/upsert)."""
-    for _ in range(5):
+
+    def attempt(_staged):
         head = current_version(path)
         if head is None:
             raise FileNotFoundError(f"no snapshots at {path}")
@@ -2865,24 +2930,19 @@ def snapshot_delete(
         remaining = read_snapshot(spark, path, version=head).where(
             ~predicate.eqNullSafe(True)
         )
-        try:
-            return snapshot_write(
-                remaining,
-                path,
-                mode="overwrite",
-                partition_by=(
-                    partition_by
-                    if partition_by is not None
-                    else _load_manifest(path, head).get("partition_by")
-                ),
-                expected_parent=head,
-            )
-        except ConcurrentSnapshotError:
-            continue
-    raise ConcurrentSnapshotError(
-        f"delete at {path} lost 5 re-plan races — a writer loop is "
-        f"outrunning this one"
-    )
+        return snapshot_write(
+            remaining,
+            path,
+            mode="overwrite",
+            partition_by=(
+                partition_by
+                if partition_by is not None
+                else _load_manifest(path, head).get("partition_by")
+            ),
+            expected_parent=head,
+        )
+
+    return _optimistic(path, "delete", attempt)
 
 
 def _staged_parquet_files(
@@ -2909,23 +2969,29 @@ def _staged_parquet_files(
     return sorted(files), n_rows
 
 
-def _stage_delete_vector(path, head, hits):
-    """Stage a positional delete vector (``(file_path, pos)`` frame)
-    for a commit on top of ``head``: written globally sorted so
-    task-side lookups for one data file prune row groups. Returns
-    ``(delete_rel, files, n_rows)``; an empty vector is swept and
-    reported as ``(None, [], 0)`` — shared by the three MoR DML
-    writers (delete/merge/update)."""
+def _stage_delete_vector(path, head, rows, staged):
+    """Stage the positional delete vector masking ``rows`` (a
+    :func:`_live_rows` frame) for a commit on top of ``head``:
+    ``(file_path, pos)``, written globally sorted so task-side lookups
+    for one data file prune row groups. Returns ``(delete_rel,
+    files)``; an empty vector is swept and reported as ``(None, [])``
+    — shared by the three MoR DML writers (delete/merge/update)."""
+    from pyspark.sql import functions as F
+
     delete_rel = os.path.join(
         _DATA_DIR, f"d{head + 1:08d}-{uuid.uuid4().hex[:8]}"
     )
+    staged.append(delete_rel)
     delete_abs = os.path.join(path, delete_rel)
-    hits.sort("file_path", "pos").write.mode("error").parquet(delete_abs)
+    rows.select(
+        F.col("__snap_file").alias("file_path"),
+        F.col("__snap_pos").cast("long").alias("pos"),
+    ).sort("file_path", "pos").write.mode("error").parquet(delete_abs)
     files, n_rows = _staged_parquet_files(delete_abs)
     if n_rows == 0:
         shutil.rmtree(delete_abs)
-        return None, [], 0
-    return delete_rel, files, n_rows
+        return None, []
+    return delete_rel, files
 
 
 def snapshot_merge_mor(
@@ -2933,7 +2999,6 @@ def snapshot_merge_mor(
     path: str,
     updates: DataFrame,
     keys: list[str],
-    max_commit_retries: int = 5,
 ) -> int:
     """MERGE-ON-READ upsert — Iceberg v2's actual MERGE INTO shape:
     target rows whose key appears in ``updates`` are masked by a
@@ -2987,30 +3052,16 @@ def snapshot_merge_mor(
             "(it would only ever accumulate inserts); delete + append "
             "NULL-keyed rows explicitly instead"
         )
-    for _ in range(max_commit_retries):
+
+    def attempt(staged):
         head = current_version(path)
         if head is None:
             raise FileNotFoundError(f"no snapshots at {path}")
-        manifest = _load_manifest(path, head)
-        tagged = _tagged_commits(
-            spark,
-            path,
-            manifest["commits"],
-            schema_log=manifest.get("schema_log"),
-        )
-        live = _apply_eq_deletes(
-            spark,
-            path,
-            _apply_delete_vectors(
-                spark, path, tagged, manifest.get("deletes")
-            ),
-            manifest.get("eq_deletes"),
-        )
-        live_cols = [
+        live = _live_rows(spark, path, _load_manifest(path, head))
+        missing = [
             c for c in live.columns
-            if c not in ("__snap_file", "__snap_pos", "__snap_rel")
+            if c not in _TAG_COLS and c not in updates.columns
         ]
-        missing = [c for c in live_cols if c not in updates.columns]
         if missing:
             # the union-by-name read would silently NULL these in the
             # replacement rows — a typo'd column must fail loudly, the
@@ -3022,44 +3073,22 @@ def snapshot_merge_mor(
                 f"are fine)"
             )
         upd_keys = updates.select(*keys).distinct()
-        hits = live.join(F.broadcast(upd_keys), keys, "semi").select(
-            F.col("__snap_file").alias("file_path"),
-            F.col("__snap_pos").cast("long").alias("pos"),
+        delete_rel, vec_files = _stage_delete_vector(
+            path, head, live.join(F.broadcast(upd_keys), keys, "semi"), staged
         )
-        delete_rel, vec_files, n_masked = _stage_delete_vector(
-            path, head, hits
+        data_rel, data_files = _stage_frame(updates, path, head, staged)
+        return commit_staged_files(
+            path,
+            data_rel,
+            data_files,
+            mode="append",
+            expected_parent=head,
+            spark=spark,
+            deletes_add={delete_rel: vec_files} if delete_rel else None,
+            operation="merge",
         )
-        data_rel = os.path.join(
-            _DATA_DIR, f"c{head + 1:08d}-{uuid.uuid4().hex[:8]}"
-        )
-        data_abs = os.path.join(path, data_rel)
-        updates.write.mode("error").parquet(data_abs)
-        data_files, _n = _staged_parquet_files(data_abs, count_rows=False)
-        try:
-            return commit_staged_files(
-                path,
-                data_rel,
-                data_files,
-                mode="append",
-                expected_parent=head,
-                spark=spark,
-                deletes_add=(
-                    {delete_rel: vec_files} if n_masked else None
-                ),
-                operation="merge",
-            )
-        except ConcurrentSnapshotError:
-            # vectors/positions were derived from a head that moved:
-            # discard both staged dirs and re-plan from the new head
-            shutil.rmtree(data_abs, ignore_errors=True)
-            if n_masked:
-                shutil.rmtree(
-                    os.path.join(path, delete_rel), ignore_errors=True
-                )
-    raise ConcurrentSnapshotError(
-        f"MoR merge at {path} lost {max_commit_retries} re-plan races "
-        f"— a writer loop is outrunning this one"
-    )
+
+    return _optimistic(path, "MoR merge", attempt)
 
 
 def snapshot_update_mor(
@@ -3067,7 +3096,6 @@ def snapshot_update_mor(
     path: str,
     predicate: Column,
     set_exprs: dict[str, Column],
-    max_commit_retries: int = 5,
 ) -> int:
     """MERGE-ON-READ ``UPDATE table SET col = expr WHERE pred`` —
     the UPDATE face of the vector DML family: matched LIVE rows are
@@ -3079,29 +3107,14 @@ def snapshot_update_mor(
     nothing commits nothing and returns the unchanged head.
     Incremental consumers refuse to tail across it, like every
     rewrite. Returns the head version."""
-    from pyspark.sql import functions as F
-
     if not set_exprs:
         raise ValueError("snapshot_update_mor needs at least one SET")
-    for _ in range(max_commit_retries):
+
+    def attempt(staged):
         head = current_version(path)
         if head is None:
             raise FileNotFoundError(f"no snapshots at {path}")
-        manifest = _load_manifest(path, head)
-        tagged = _tagged_commits(
-            spark,
-            path,
-            manifest["commits"],
-            schema_log=manifest.get("schema_log"),
-        )
-        live = _apply_eq_deletes(
-            spark,
-            path,
-            _apply_delete_vectors(
-                spark, path, tagged, manifest.get("deletes")
-            ),
-            manifest.get("eq_deletes"),
-        )
+        live = _live_rows(spark, path, _load_manifest(path, head))
         unknown = [c for c in set_exprs if c not in live.columns]
         if unknown:
             raise ValueError(f"SET on unknown column(s): {unknown}")
@@ -3111,57 +3124,35 @@ def snapshot_update_mor(
         matched = live.where(predicate.eqNullSafe(True)).localCheckpoint(
             eager=True
         )
-        hits = matched.select(
-            F.col("__snap_file").alias("file_path"),
-            F.col("__snap_pos").cast("long").alias("pos"),
+        delete_rel, vec_files = _stage_delete_vector(
+            path, head, matched, staged
         )
-        delete_rel, vec_files, n_matched = _stage_delete_vector(
-            path, head, hits
-        )
-        if n_matched == 0:
+        if delete_rel is None:
             return head
         # ONE projection: every SET right-hand side evaluates against
         # the PRE-update row (SQL UPDATE semantics) — sequential
         # withColumn would let {"a": col("b"), "b": col("a")} read the
         # already-updated a and depend on dict order
-        rewritten = matched.drop(
-            "__snap_file", "__snap_pos", "__snap_rel"
-        ).withColumns(
-            set_exprs
+        rewritten = matched.drop(*_TAG_COLS).withColumns(set_exprs)
+        data_rel, data_files = _stage_frame(rewritten, path, head, staged)
+        return commit_staged_files(
+            path,
+            data_rel,
+            data_files,
+            mode="append",
+            expected_parent=head,
+            spark=spark,
+            deletes_add={delete_rel: vec_files},
+            operation="update",
         )
-        data_rel = os.path.join(
-            _DATA_DIR, f"c{head + 1:08d}-{uuid.uuid4().hex[:8]}"
-        )
-        data_abs = os.path.join(path, data_rel)
-        rewritten.write.mode("error").parquet(data_abs)
-        data_files, _n = _staged_parquet_files(data_abs, count_rows=False)
-        try:
-            return commit_staged_files(
-                path,
-                data_rel,
-                data_files,
-                mode="append",
-                expected_parent=head,
-                spark=spark,
-                deletes_add={delete_rel: vec_files},
-                operation="update",
-            )
-        except ConcurrentSnapshotError:
-            shutil.rmtree(data_abs, ignore_errors=True)
-            shutil.rmtree(
-                os.path.join(path, delete_rel), ignore_errors=True
-            )
-    raise ConcurrentSnapshotError(
-        f"MoR update at {path} lost {max_commit_retries} re-plan races "
-        f"— a writer loop is outrunning this one"
-    )
+
+    return _optimistic(path, "MoR update", attempt)
 
 
 def snapshot_delete_mor(
     spark: SparkSession,
     path: str,
     predicate: Column,
-    max_commit_retries: int = 5,
 ) -> int:
     """MERGE-ON-READ row-level DELETE — Iceberg v2 positional delete
     files: instead of rewriting every touched data file
@@ -3191,83 +3182,45 @@ def snapshot_delete_mor(
     overwrite/merge/compact. A delete matching ZERO rows commits
     nothing and returns the unchanged head. Returns the head version.
     """
-    from pyspark.sql import functions as F
 
-    for _ in range(max_commit_retries):
+    def attempt(staged):
         head = current_version(path)
         if head is None:
             raise FileNotFoundError(f"no snapshots at {path}")
-        manifest = _load_manifest(path, head)
         # plan against LIVE rows only (existing vectors applied): a
         # re-delete of an already-deleted position would be harmless
         # but bloats vectors; this keeps them minimal
-        tagged = _tagged_commits(
-            spark,
-            path,
-            manifest["commits"],
-            schema_log=manifest.get("schema_log"),
+        live = _live_rows(spark, path, _load_manifest(path, head))
+        delete_rel, files = _stage_delete_vector(
+            path, head, live.where(predicate.eqNullSafe(True)), staged
         )
-        live = _apply_eq_deletes(
-            spark,
-            path,
-            _apply_delete_vectors(
-                spark, path, tagged, manifest.get("deletes")
-            ),
-            manifest.get("eq_deletes"),
-        )
-        hits = live.where(predicate.eqNullSafe(True)).select(
-            F.col("__snap_file").alias("file_path"),
-            F.col("__snap_pos").cast("long").alias("pos"),
-        )
-        delete_rel, files, n_rows = _stage_delete_vector(path, head, hits)
-        if n_rows == 0:
+        if delete_rel is None:
             return head  # nothing matched: no commit
-        delete_abs = os.path.join(path, delete_rel)
-        new_deletes = dict(manifest.get("deletes") or {})
-        new_deletes[delete_rel] = files
-        version = _next_version(path)
-        new_manifest = {
-            "version": version,
-            "parent": head,
-            "operation": "delete",
-            "timestamp": time.time(),
-            "partition_by": manifest.get("partition_by"),
-            "commits": manifest["commits"],
-            "deletes": new_deletes,
-        }
-        # table properties ride along unchanged — the data files (and
-        # their recorded bounds) are exactly the parent's
-        if manifest.get("stats_cols"):
-            new_manifest["stats_cols"] = manifest["stats_cols"]
-            new_manifest["stats"] = manifest.get("stats") or {}
-        if manifest.get("eq_deletes"):
-            new_manifest["eq_deletes"] = manifest["eq_deletes"]
-        if manifest.get("schema_log"):
-            new_manifest["schema_log"] = manifest["schema_log"]
-        if manifest.get("stream_state"):
-            new_manifest["stream_state"] = manifest["stream_state"]
-        # data files ride through verbatim: every parent shard reuses,
-        # and only the new delete vector lands in a fresh shard
-        if _commit_manifest_any(
-            path, version, new_manifest, reuse_base=manifest
-        ):
-            return version
-        # lost the race: the vectors were computed against a head that
-        # no longer exists — discard and re-plan from the new head
-        shutil.rmtree(delete_abs)
-    raise ConcurrentSnapshotError(
-        f"MoR delete at {path} lost {max_commit_retries} re-plan races "
-        f"— a writer loop is outrunning this one"
-    )
+        # metadata-only: the data files (and their recorded bounds)
+        # ride through verbatim, so every parent shard is reused and
+        # only the new vector lands in a fresh one
+        return commit_staged_files(
+            path,
+            None,
+            [],
+            deletes_add={delete_rel: files},
+            operation="delete",
+            expected_parent=head,
+        )
+
+    return _optimistic(path, "MoR delete", attempt)
 
 
-def _stage_eq_delete(path: str, head, keys_df: DataFrame, cols) -> tuple:
+def _stage_eq_delete(
+    path: str, head, keys_df: DataFrame, cols, staged: list[str]
+) -> tuple:
     """Stage an equality-delete key file (distinct key rows, one small
-    parquet). Returns ``(eq_rel, files, n_keys)`` — ``(None, [], 0)``
-    for an empty key set (nothing to commit)."""
+    parquet). Returns ``(eq_rel, files)`` — ``(None, [])`` for an
+    empty key set (nothing to commit)."""
     eq_rel = os.path.join(
         _DATA_DIR, f"e{(head or 0) + 1:08d}-{uuid.uuid4().hex[:8]}"
     )
+    staged.append(eq_rel)
     eq_abs = os.path.join(path, eq_rel)
     keys_df.select(*cols).distinct().coalesce(1).write.mode(
         "error"
@@ -3275,8 +3228,8 @@ def _stage_eq_delete(path: str, head, keys_df: DataFrame, cols) -> tuple:
     files, n_keys = _staged_parquet_files(eq_abs)
     if n_keys == 0:
         shutil.rmtree(eq_abs)
-        return None, [], 0
-    return eq_rel, files, n_keys
+        return None, []
+    return eq_rel, files
 
 
 def snapshot_delete_eq(
@@ -3284,7 +3237,6 @@ def snapshot_delete_eq(
     path: str,
     keys_df: DataFrame,
     key_cols: list[str] | None = None,
-    max_commit_retries: int = 5,
     branch: str | None = None,
 ) -> int:
     """EQUALITY delete — Iceberg v2's second delete flavor (format
@@ -3317,30 +3269,22 @@ def snapshot_delete_eq(
     missing = [c for c in cols if c not in keys_df.columns]
     if missing:
         raise ValueError(f"keys_df lacks key column(s): {missing}")
-    head = (
-        _branch_head(path, branch)
-        if branch is not None
-        else current_version(path)
-    )
+    head = _head(path, branch)
     if head is None:
         raise FileNotFoundError(f"no snapshots at {path}")
-    eq_rel, files, n_keys = _stage_eq_delete(path, head, keys_df, cols)
-    if n_keys == 0:
-        return head
-    try:
+    with _staging(path) as staged:
+        eq_rel, files = _stage_eq_delete(path, head, keys_df, cols, staged)
+        if eq_rel is None:
+            return head
         return commit_staged_files(
             path,
             None,
             [],
             mode="append",
-            max_commit_retries=max_commit_retries,
             eq_deletes_add={eq_rel: {"files": files, "cols": cols}},
             operation="eq-delete",
             branch=branch,
         )
-    except BaseException:
-        shutil.rmtree(os.path.join(path, eq_rel), ignore_errors=True)
-        raise
 
 
 def snapshot_upsert_eq(
@@ -3348,7 +3292,6 @@ def snapshot_upsert_eq(
     path: str,
     updates: DataFrame,
     key_cols: list[str],
-    max_commit_retries: int = 5,
     branch: str | None = None,
 ) -> int:
     """Streaming-CDC UPSERT via equality deletes — Iceberg's streaming
@@ -3385,42 +3328,27 @@ def snapshot_upsert_eq(
             "updates carry duplicate keys — dedupe first (no order "
             "column exists to pick a winner)"
         )
-    head = (
-        _branch_head(path, branch)
-        if branch is not None
-        else current_version(path)
-    )
+    head = _head(path, branch)
     if head is None:
         raise FileNotFoundError(f"no snapshots at {path}")
-    eq_rel, eq_files, n_keys = _stage_eq_delete(
-        path, head, updates, key_cols
-    )
-    data_rel = os.path.join(
-        _DATA_DIR, f"c{head + 1:08d}-{uuid.uuid4().hex[:8]}"
-    )
-    data_abs = os.path.join(path, data_rel)
-    updates.write.mode("error").parquet(data_abs)
-    data_files, n_rows = _staged_parquet_files(data_abs)
-    try:
+    with _staging(path) as staged:
+        eq_rel, eq_files = _stage_eq_delete(
+            path, head, updates, key_cols, staged
+        )
+        data_rel, data_files = _stage_frame(updates, path, head, staged)
         return commit_staged_files(
             path,
             data_rel,
             data_files,
             mode="append",
-            max_commit_retries=max_commit_retries,
             eq_deletes_add=(
                 {eq_rel: {"files": eq_files, "cols": list(key_cols)}}
-                if n_keys
+                if eq_rel
                 else None
             ),
             operation="eq-upsert",
             branch=branch,
         )
-    except BaseException:
-        shutil.rmtree(data_abs, ignore_errors=True)
-        if eq_rel:
-            shutil.rmtree(os.path.join(path, eq_rel), ignore_errors=True)
-        raise
 
 
 def delete_debt(path: str, version: int | None = None) -> dict:
@@ -3554,7 +3482,8 @@ def snapshot_compact(
     fresh files, passing ``stats_cols=[...]`` (or leaving ``None`` on
     a table whose property is already set — snapshot_write inherits)
     yields a version with 100% bounds coverage."""
-    for _ in range(5):
+
+    def attempt(_staged):
         head = current_version(path)
         if head is None:
             raise FileNotFoundError(f"no snapshots at {path}")
@@ -3588,25 +3517,20 @@ def snapshot_compact(
             )
         else:
             compacted = head_df.coalesce(n)
-        try:
-            return snapshot_write(
-                compacted,
-                path,
-                mode="overwrite",
-                partition_by=(
-                    partition_by
-                    if partition_by is not None
-                    else manifest.get("partition_by")
-                ),
-                expected_parent=head,
-                stats_cols=stats_cols,
-            )
-        except ConcurrentSnapshotError:
-            continue
-    raise ConcurrentSnapshotError(
-        f"compaction at {path} lost 5 re-plan races — a writer loop "
-        f"is outrunning this one"
-    )
+        return snapshot_write(
+            compacted,
+            path,
+            mode="overwrite",
+            partition_by=(
+                partition_by
+                if partition_by is not None
+                else manifest.get("partition_by")
+            ),
+            expected_parent=head,
+            stats_cols=stats_cols,
+        )
+
+    return _optimistic(path, "compaction", attempt)
 
 
 def snapshot_rewrite_data_files(
@@ -3615,7 +3539,6 @@ def snapshot_rewrite_data_files(
     with_deletes: bool = True,
     smaller_than_bytes: int | None = None,
     target_partitions: int | None = None,
-    max_commit_retries: int = 5,
     target_spec: list[str] | None = None,
     max_files: int | None = None,
 ) -> dict[str, Any]:
@@ -3655,7 +3578,7 @@ def snapshot_rewrite_data_files(
     them without footer reads."""
     import pyarrow.parquet as pq
 
-    for _ in range(max_commit_retries):
+    def attempt(staged):
         head = current_version(path)
         if head is None:
             raise FileNotFoundError(f"no snapshots at {path}")
@@ -3736,11 +3659,6 @@ def snapshot_rewrite_data_files(
         n = target_partitions or max(
             1, min(spark.sparkContext.defaultParallelism, n_sel)
         )
-        commit_rel = os.path.join(
-            _DATA_DIR, f"c{head + 1:08d}-{uuid.uuid4().hex[:8]}"
-        )
-        commit_abs = os.path.join(path, commit_rel)
-        writer = df.coalesce(n).write.mode("error")
         # spec evolution: rewritten rows land in the TARGET layout and
         # the table's recorded spec moves with them (future
         # inherit-writes follow); untouched commits keep their own
@@ -3749,10 +3667,9 @@ def snapshot_rewrite_data_files(
             if target_spec is not None
             else manifest.get("partition_by") or []
         )
-        if part_by:
-            writer = writer.partitionBy(*part_by)
-        writer.parquet(commit_abs)
-        files_new, _n = _staged_parquet_files(commit_abs, count_rows=False)
+        commit_rel, files_new = _stage_frame(
+            df.coalesce(n), path, head, staged, part_by
+        )
 
         stats = manifest.get("stats") or {}
         new_commits: dict[str, list[str]] = {}
@@ -3771,11 +3688,10 @@ def snapshot_rewrite_data_files(
                 if cst:
                     new_stats[rel] = cst
         new_commits[commit_rel] = files_new
-        version = _next_version(path)
         stats_cols = manifest.get("stats_cols") or []
         if stats_cols and files_new:
             new_stats[commit_rel] = _collect_file_stats(
-                spark, commit_abs, files_new, stats_cols
+                spark, os.path.join(path, commit_rel), files_new, stats_cols
             )
 
         surviving = {
@@ -3805,45 +3721,28 @@ def snapshot_rewrite_data_files(
             else:
                 dropped.append(drel)
 
-        new_manifest = {
-            "version": version,
-            "parent": head,
-            "operation": "compact",
-            "timestamp": time.time(),
-            "partition_by": part_by,
-            "commits": new_commits,
+        new_manifest = _next_manifest(
+            path,
+            manifest,
+            head,
+            "compact",
+            partition_by=part_by,
+            commits=new_commits,
+            stats=new_stats,
+            deletes=new_deletes,
+            eq_deletes=new_eq,
+        )
+        return {
+            "version": _land(path, new_manifest, reuse_base=manifest),
+            "rewritten_files": n_sel,
+            "dropped_delete_dirs": sorted(dropped),
         }
-        if stats_cols:
-            new_manifest["stats_cols"] = stats_cols
-        if new_stats:
-            new_manifest["stats"] = new_stats
-        if new_deletes:
-            new_manifest["deletes"] = new_deletes
-        if new_eq:
-            new_manifest["eq_deletes"] = new_eq
-        if manifest.get("schema_log"):
-            new_manifest["schema_log"] = manifest["schema_log"]
-        if manifest.get("stream_state"):
-            new_manifest["stream_state"] = manifest["stream_state"]
-        if _commit_manifest_any(
-            path, version, new_manifest, reuse_base=manifest
-        ):
-            return {
-                "version": version,
-                "rewritten_files": n_sel,
-                "dropped_delete_dirs": sorted(dropped),
-            }
-        # lost the race: the selection was derived against a head that
-        # no longer exists — discard the staged rewrite and re-plan
-        shutil.rmtree(commit_abs, ignore_errors=True)
-    raise ConcurrentSnapshotError(
-        f"rewrite_data_files at {path} lost {max_commit_retries} "
-        f"re-plan races — a writer loop is outrunning this one"
-    )
+
+    return _optimistic(path, "rewrite_data_files", attempt)
 
 
 def snapshot_rewrite_manifests(
-    path: str, target_shards: int = 1, max_commit_retries: int = 5
+    path: str, target_shards: int = 1
 ) -> dict[str, Any]:
     """Compact a sharded table's METADATA — Iceberg's
     ``rewrite_manifests`` (the reference's maintenance trio,
@@ -3860,7 +3759,8 @@ def snapshot_rewrite_manifests(
     at/below the target, or too small to shard, is left untouched
     with no new version. Returns {"version", "shards_before",
     "shards_after"}."""
-    for _ in range(max_commit_retries):
+
+    def attempt(_staged):
         head = current_version(path)
         if head is None:
             raise FileNotFoundError(f"no snapshots at {path}")
@@ -3896,40 +3796,29 @@ def snapshot_rewrite_manifests(
                     deletes if gi == 0 else {},
                 )
             )
+        new = _next_manifest(path, manifest, head, "rewrite-manifests")
+        # the file set is bit-identical, so the head's union-schema
+        # record carries over; a LEGACY head without one gets it
+        # computed once here (r12) — metadata maintenance is exactly
+        # where a one-off footer walk is acceptable
+        _record_union_schema(path, new, manifest)
         out = {
             k: v
-            for k, v in manifest.items()
-            if k not in ("commits", "stats", "deletes", "shards")
+            for k, v in new.items()
+            if k not in ("commits", "stats", "deletes")
         }
-        version = _next_version(path)
-        out["version"] = version
-        out["parent"] = head
-        out["operation"] = "rewrite-manifests"
-        out["timestamp"] = time.time()
         out["shards"] = descriptors
-        if "arrow_schema_b64" not in out:
-            # LEGACY-TABLE upgrade path (r12): a pre-record table gets
-            # its union schema computed once here — metadata
-            # maintenance is exactly where a one-off footer walk is
-            # acceptable — and every later schema() is one head read.
-            # (The resolved head's record, when present, rode through
-            # the wholesale copy above: file set is bit-identical.)
-            tmp = dict(out)
-            tmp["commits"] = commits
-            _record_union_schema(path, tmp, None)
-            for k in ("arrow_schema_b64", "partition_schema_b64"):
-                if k in tmp:
-                    out[k] = tmp[k]
-        if _commit_manifest(path, version, out):
-            return {
-                "version": version,
-                "shards_before": len(shards),
-                "shards_after": len(descriptors),
-            }
-    raise ConcurrentSnapshotError(
-        f"rewrite_manifests at {path} lost {max_commit_retries} "
-        f"optimistic races"
-    )
+        if not _commit_manifest(path, out["version"], out):
+            raise ConcurrentSnapshotError(
+                f"v{out['version']} at {path} was taken by another writer"
+            )
+        return {
+            "version": out["version"],
+            "shards_before": len(shards),
+            "shards_after": len(descriptors),
+        }
+
+    return _optimistic(path, "rewrite_manifests", attempt)
 
 
 def read_appends_between(
@@ -3985,60 +3874,36 @@ def read_appends_between(
     )
 
 
-def snapshot_rollback(
-    path: str, to_version: int, max_commit_retries: int = 5
-) -> int:
+def snapshot_rollback(path: str, to_version: int) -> int:
     """Roll the table back to a prior version as a NEW commit whose
     file set is exactly that version's — Iceberg's
     ``rollback_to_snapshot``: metadata-only (no data rewritten, no
     files touched), instant at any table size, and itself
     time-travelable (the bad head stays inspectable until expiry).
-    Returns the new head version."""
+
+    The whole table state rewinds WITH the file set: recorded bounds
+    (dropping them would turn every post-rollback scan unprunable,
+    r9), delete vectors and equality deletes (a rollback across a MoR
+    delete resurrects the rows), the schema log (a rollback across a
+    rename/drop restores the old logical schema) and the stream
+    high-water marks (batches committed after ``to_version`` are
+    un-applied, so a replay from a correspondingly rewound checkpoint
+    can re-land them). The target's own shards cover the state
+    verbatim, so a sharded rollback stays metadata-only O(1). Returns
+    the new head version."""
     target = _load_manifest(path, to_version)
-    for _ in range(max_commit_retries):
-        cur = current_version(path)
-        version = _next_version(path)
-        manifest = {
-            "version": version,
-            "parent": cur,
-            "operation": "rollback",
-            "rolled_back_to": to_version,
-            "timestamp": time.time(),
-            "partition_by": target.get("partition_by"),
-            "commits": target["commits"],
-        }
-        # stream markers rewind WITH the data: batches committed after
-        # ``to_version`` are un-applied by the rollback, so their
-        # high-water marks must not survive it — a replay (from a
-        # correspondingly rewound checkpoint) can then re-land them
-        if target.get("stream_state"):
-            manifest["stream_state"] = target["stream_state"]
-        # recorded bounds belong to the FILE SET, which is exactly the
-        # target's — dropping them here would silently turn every
-        # post-rollback scan unprunable (r9)
-        if target.get("stats_cols"):
-            manifest["stats_cols"] = target["stats_cols"]
-            manifest["stats"] = target.get("stats") or {}
-        # the rolled-back-to file set is only correct WITH its delete
-        # vectors: a rollback across a MoR delete must resurrect the
-        # rows, and one to after it must keep them deleted — equality
-        # deletes follow the identical rule
-        if target.get("deletes"):
-            manifest["deletes"] = target["deletes"]
-        if target.get("eq_deletes"):
-            manifest["eq_deletes"] = target["eq_deletes"]
-        # likewise its schema log: a rollback across a rename/drop must
-        # restore the old logical schema (the target's log is exactly
-        # the evolution state as of that version)
-        if target.get("schema_log"):
-            manifest["schema_log"] = target["schema_log"]
-        # the target's own shards cover the rolled-back state verbatim,
-        # so a rollback of a sharded table stays metadata-only O(1)
-        if _commit_manifest_any(path, version, manifest, reuse_base=target):
-            return version
-    raise ConcurrentSnapshotError(
-        f"rollback at {path} lost {max_commit_retries} optimistic races"
-    )
+
+    def attempt(_staged):
+        manifest = _next_manifest(
+            path,
+            target,
+            current_version(path),
+            "rollback",
+            rolled_back_to=to_version,
+        )
+        return _land(path, manifest, reuse_base=target)
+
+    return _optimistic(path, "rollback", attempt)
 
 
 def _logical_columns(path: str, manifest: dict) -> list[str]:
@@ -4076,9 +3941,7 @@ def _logical_columns(path: str, manifest: dict) -> list[str]:
     return seen
 
 
-def snapshot_rename_column(
-    path: str, old: str, new: str, max_commit_retries: int = 5
-) -> int:
+def snapshot_rename_column(path: str, old: str, new: str) -> int:
     """METADATA-ONLY column rename — Iceberg's ``ALTER TABLE RENAME
     COLUMN`` (field-id based; the reference's Iceberg v2 tables get
     this from the format itself): commits a new version whose file set
@@ -4097,14 +3960,10 @@ def snapshot_rename_column(
     tail across the commit (operation ``schema`` fails the append-only
     window rule) — restart them from a bootstrap, Delta's own contract
     for schema-changed streams. Returns the new version."""
-    return _commit_schema_op(
-        path, {"op": "rename", "from": old, "to": new}, max_commit_retries
-    )
+    return _commit_schema_op(path, {"op": "rename", "from": old, "to": new})
 
 
-def snapshot_drop_column(
-    path: str, column: str, max_commit_retries: int = 5
-) -> int:
+def snapshot_drop_column(path: str, column: str) -> int:
     """METADATA-ONLY column drop — Iceberg's ``ALTER TABLE DROP
     COLUMN``: the physical column stays in the files (history keeps
     reading it at pre-drop versions) but is hidden from every read at
@@ -4113,19 +3972,16 @@ def snapshot_drop_column(
     separate — the old column's values never leak into the new one
     (old commits read NULL for it). Partition columns are refused, as
     :func:`snapshot_rename_column`. Returns the new version."""
-    return _commit_schema_op(
-        path, {"op": "drop", "column": column}, max_commit_retries
-    )
+    return _commit_schema_op(path, {"op": "drop", "column": column})
 
 
-def _commit_schema_op(
-    path: str, entry: dict, max_commit_retries: int
-) -> int:
+def _commit_schema_op(path: str, entry: dict) -> int:
     """Validate + CAS-commit one schema-log entry (shared by rename and
     drop): operation ``schema``, file set / stats / deletes /
     stream_state carried verbatim, the entry frozen onto the commit
     dirs live at validation time."""
-    for _ in range(max_commit_retries):
+
+    def attempt(_staged):
         cur = current_version(path)
         if cur is None:
             raise FileNotFoundError(f"no snapshots at {path}")
@@ -4187,51 +4043,31 @@ def _commit_schema_op(
                 f"of live equality-delete entries {sorted(eq_refs)} — "
                 f"compact the table to materialize them first"
             )
-        version = _next_version(path)
-        log = list(manifest.get("schema_log") or [])
-        log.append(
-            {**entry, "v": version, "applies_to": sorted(manifest["commits"])}
-        )
-        new_manifest = {
-            "version": version,
-            "parent": cur,
-            "operation": "schema",
-            "timestamp": time.time(),
-            "partition_by": manifest.get("partition_by") or [],
-            "commits": manifest["commits"],
-            "schema_log": log,
-        }
-        # table properties ride along; stats_cols follows the evolution
-        # so FUTURE commits collect bounds under the logical names
-        # (already-recorded bounds keep their physical keys — the scan
-        # translates)
-        stats_cols = list(manifest.get("stats_cols") or [])
+        # stats_cols follows the evolution so FUTURE commits collect
+        # bounds under the logical names (already-recorded bounds keep
+        # their physical keys — the scan translates); the rest of the
+        # state rides through verbatim, so every parent shard is reused
+        # and schema evolution on a sharded table writes only the list
+        stats_cols = manifest.get("stats_cols") or []
         if entry["op"] == "rename":
             stats_cols = [
                 entry["to"] if c == entry["from"] else c for c in stats_cols
             ]
         else:
             stats_cols = [c for c in stats_cols if c != entry["column"]]
-        if stats_cols:
-            new_manifest["stats_cols"] = stats_cols
-        if manifest.get("stats"):
-            new_manifest["stats"] = manifest["stats"]
-        if manifest.get("deletes"):
-            new_manifest["deletes"] = manifest["deletes"]
-        if manifest.get("eq_deletes"):
-            new_manifest["eq_deletes"] = manifest["eq_deletes"]
-        if manifest.get("stream_state"):
-            new_manifest["stream_state"] = manifest["stream_state"]
-        # state rides through verbatim: every parent shard is reused,
-        # so schema evolution on a sharded table writes only the list
-        if _commit_manifest_any(
-            path, version, new_manifest, reuse_base=manifest
-        ):
-            return version
-    raise ConcurrentSnapshotError(
-        f"schema evolution at {path} lost {max_commit_retries} "
-        f"optimistic races"
-    )
+        new_manifest = _next_manifest(
+            path, manifest, cur, "schema", stats_cols=stats_cols
+        )
+        new_manifest["schema_log"] = list(manifest.get("schema_log") or []) + [
+            {
+                **entry,
+                "v": new_manifest["version"],
+                "applies_to": sorted(manifest["commits"]),
+            }
+        ]
+        return _land(path, new_manifest, reuse_base=manifest)
+
+    return _optimistic(path, "schema evolution", attempt)
 
 
 def snapshot_changes(

@@ -350,38 +350,34 @@ def commit_stream_batch(
     CHECKPOINT — restarting a query from a fresh checkpoint resets
     them to 0, so ``source_id`` must name the (query, checkpoint)
     lineage, not just the query.
-    """
-    from nyc_taxi_data_ingestion_spark.sources.snapshots import (
-        EXPECT_NO_PARENT,
-        ConcurrentSnapshotError,
-        current_version,
-        snapshot_write,
-        stream_state,
-    )
 
-    for _ in range(5):
-        head = current_version(path)
-        try:
-            marks = stream_state(path, head)
-        except FileNotFoundError:
-            continue  # head's manifest expired under us: re-poll
-        if marks.get(source_id, -1) >= batch_id:
+    The replay check runs first, so a replayed batch writes nothing;
+    otherwise the batch is staged ONCE and committed through
+    ``snapshots.commit_staged_stream_batch`` — a lost commit race
+    re-reads the marker and re-lands the same files, never rewrites
+    them, and a batch that does not land takes its staged dir with it.
+    """
+    import contextlib
+    import os
+    import shutil
+
+    from nyc_taxi_data_ingestion_spark.sources import snapshots as S
+
+    # a head expired under this read is re-read by the commit loop
+    with contextlib.suppress(FileNotFoundError):
+        if S.stream_state(path).get(source_id, -1) >= batch_id:
             return None
-        try:
-            return snapshot_write(
-                batch_df,
-                path,
-                mode="append",
-                partition_by=partition_by,
-                expected_parent=head if head is not None else EXPECT_NO_PARENT,
-                stream_state={source_id: batch_id},
-            )
-        except ConcurrentSnapshotError:
-            continue
-    raise ConcurrentSnapshotError(
-        f"stream batch {batch_id} ({source_id}) lost 5 commit races at "
-        f"{path} — a writer loop is outrunning this stream"
-    )
+    with S._staging(path) as staged:
+        rel, files = S._stage_frame(
+            batch_df, path, S.current_version(path), staged, partition_by
+        )
+        version = S.commit_staged_stream_batch(
+            path, rel, files, source_id, batch_id, partition_by=partition_by
+        )
+    if version is None:
+        # a concurrent run of this batch landed it first
+        shutil.rmtree(os.path.join(path, rel), ignore_errors=True)
+    return version
 
 
 def snapshot_append_sink(

@@ -883,18 +883,28 @@ def test_write_observed_attaches_clean_plan_findings(spark, sf_dir, tmp_path):
         assert [f for f in m["plan_findings"] if f["severity"] == "error"] == []
 
 
-def test_run_medallion_incremental_mart_reports_metrics(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("entry", ["run_medallion", "run_pipeline"])
+def test_incremental_mart_reports_metrics(spark, sf_dir, tmp_path, entry):
+    """Both entry points materialize gold through the same compiler
+    function, so an incremental mart reports observed metrics from
+    either."""
     from nyc_taxi_data_ingestion_spark.plans.runner import run_medallion
 
     cfg = events_config(sf_dir)
     cfg["gold"][0]["materialization"] = "incremental"
     cfg["gold"][0].setdefault("lookback", {"days": 36500})
     metrics: dict[str, dict] = {}
-    res = run_medallion(
-        spark, cfg, str(tmp_path / "wh_incr"), incremental=True,
-        metrics_out=metrics,
-    )
-    assert all(r.status == "ok" for r in res)
+    wh = str(tmp_path / "wh_incr")
+    if entry == "run_medallion":
+        res = run_medallion(
+            spark, cfg, wh, incremental=True, metrics_out=metrics
+        )
+        assert all(r.status == "ok" for r in res)
+    else:
+        run_pipeline(
+            spark, compile_pipeline(spark, cfg), wh, incremental=True,
+            metrics_out=metrics,
+        )
     key = f"gold/{cfg['gold'][0]['name']}"
     assert key in metrics, sorted(metrics)
     assert metrics[key]["row_count"] > 0

@@ -1118,9 +1118,7 @@ def test_sharded_manifests_roundtrip_and_compact_losslessly(
                 manifest["stats"] = stats
             if deletes:
                 manifest["deletes"] = deletes
-            assert S._commit_manifest_any(
-                path, v, dict(manifest), reuse_base=parent
-            )
+            assert S._land(path, dict(manifest), reuse_base=parent) == v
             resolved = S._load_manifest(path, v)
             assert resolved["commits"] == commits
             assert (resolved.get("stats") or {}) == stats

@@ -444,6 +444,72 @@ def test_concurrent_merges_lose_no_updates(spark, tmp_path):
     assert current_version(path) == 6
 
 
+def test_lost_race_leaves_no_staged_data(spark, tmp_path, monkeypatch):
+    """The lost race forced deterministically rather than through
+    thread timing: each writer's first staging call lands a racing
+    append before the writer can commit. The head must hold both
+    writes exactly once, and every commit dir under the table must be
+    referenced by some manifest — a loser's staged data is removed by
+    the loser, never left for expiry's GC."""
+    from nyc_taxi_data_ingestion_spark.sources import snapshots as S
+    from nyc_taxi_data_ingestion_spark.streaming.ingest import (
+        commit_stream_batch,
+    )
+
+    path = str(tmp_path / "t")
+    snapshot_write(_kv(spark, [(1, "a", 1)]), path)
+    real_staged = S._staged_parquet_files
+
+    def race_once(k):
+        fired = []
+
+        def staged(*args, **kwargs):
+            if not fired:
+                fired.append(k)
+                snapshot_write(
+                    _kv(spark, [(k, "racer", 1)]), path, mode="append"
+                )
+            return real_staged(*args, **kwargs)
+
+        monkeypatch.setattr(S, "_staged_parquet_files", staged)
+
+    def head_rows():
+        return sorted(
+            (r.k, r.v) for r in read_snapshot(spark, path).collect()
+        )
+
+    def assert_no_orphan_dirs():
+        referenced = set()
+        for m in list_snapshots(path):
+            referenced |= set(m["commits"])
+        on_disk = {
+            os.path.join("data", d)
+            for d in os.listdir(os.path.join(path, "data"))
+            if d.startswith("c")
+        }
+        assert on_disk <= referenced, sorted(on_disk - referenced)
+
+    race_once(10)
+    snapshot_merge(
+        spark, path, _kv(spark, [(1, "A", 2), (2, "b", 1)]),
+        keys=["k"], order_col="ts",
+    )
+    assert head_rows() == [(1, "A"), (2, "b"), (10, "racer")]
+    assert_no_orphan_dirs()
+
+    race_once(20)
+    v = commit_stream_batch(_kv(spark, [(3, "s", 1)]), 0, path, "src")
+    assert v == current_version(path)
+    assert head_rows() == [(1, "A"), (2, "b"), (3, "s"), (10, "racer"),
+                           (20, "racer")]
+    assert S.stream_state(path) == {"src": 0}
+    assert_no_orphan_dirs()
+    # a replay of the same batch writes nothing and lands nothing
+    assert commit_stream_batch(_kv(spark, [(3, "s", 1)]), 0, path, "src") is None
+    assert head_rows().count((3, "s")) == 1
+    assert_no_orphan_dirs()
+
+
 def test_read_appends_between_reads_only_new_commits(spark, tmp_path):
     from nyc_taxi_data_ingestion_spark.sources.snapshots import (
         read_appends_between,
@@ -749,6 +815,44 @@ def test_scan_snapshot_multi_column_predicates(spark, tmp_path):
     assert list(unhandled)
     real = [p for p in r.partitions() if p.file_abs]
     assert len(real) == 1  # same single surviving quadrant
+
+
+def test_stats_fan_out_matches_driver_side_bounds(
+    spark, tmp_path, monkeypatch
+):
+    """A commit wider than _STATS_DRIVER_MAX files collects its footer
+    bounds through a Spark mapInPandas job instead of the driver-side
+    thread pool; both must record identical bounds for the same files
+    (footer min/max, null counts, NaN-poisoned upper bounds, and the
+    exact [v, v] bounds of a path-encoded partition column)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nyc_taxi_data_ingestion_spark.sources import snapshots as S
+
+    files = []
+    for i in range(12):
+        rel = f"part={i % 3}/f{i:02d}.parquet"
+        os.makedirs(tmp_path / f"part={i % 3}", exist_ok=True)
+        pq.write_table(
+            pa.table({
+                "id": pa.array([i * 10, i * 10 + 7, None], pa.int64()),
+                "x": pa.array(
+                    [float(i), float("nan") if i % 4 == 0 else -1.5, None],
+                    pa.float64(),
+                ),
+                "s": pa.array([f"k{i:02d}", "a", None], pa.string()),
+            }),
+            str(tmp_path / rel),
+        )
+        files.append(rel)
+    cols = ["id", "x", "s", "part"]
+    driver = S._collect_file_stats(None, str(tmp_path), files, cols)
+    monkeypatch.setattr(S, "_STATS_DRIVER_MAX", 0)
+    fanned = S._collect_file_stats(spark, str(tmp_path), files, cols)
+    assert fanned == driver
+    assert driver["part=1/f04.parquet"]["part"] == [1, 1]
+    assert driver["part=0/f03.parquet"]["id"] == [30, 37, 1, 3]
 
 
 def test_stats_coverage_audit_and_compact_backfill(spark, tmp_path):
@@ -2170,8 +2274,7 @@ def test_shard_hulls_skip_whole_shards_at_scan_planning(
     )
     assert pruned_view.get("_pruned") is True
     with pytest.raises(ValueError, match="shard-pruned"):
-        S._commit_manifest_any(path, 999, dict(pruned_view),
-                               reuse_base=pruned_view)
+        S._land(path, dict(pruned_view), reuse_base=pruned_view)
 
     # schema evolution disables the skip (conservative load-all)
     S.snapshot_rename_column(path, "tag", "label")
@@ -2947,7 +3050,7 @@ def test_metadata_stress_ratios_hold():
 
 @pytest.mark.slow
 def test_concurrent_eq_deletes_race_appends_linearizably(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """Equality deletes under racing appends are LINEARIZABLE: the
     per-attempt applies_to stamp means a CAS-retried delete re-scopes
@@ -2960,6 +3063,7 @@ def test_concurrent_eq_deletes_race_appends_linearizably(
 
     from nyc_taxi_data_ingestion_spark.sources import snapshots as S
 
+    monkeypatch.setattr(S, "_COMMIT_RETRIES", 64)
     path = str(tmp_path / "t")
     S.snapshot_write(_frame(spark, 0, 40, "seed"), path)
     errs: list = []
@@ -2970,7 +3074,6 @@ def test_concurrent_eq_deletes_race_appends_linearizably(
                 _frame(spark, lo, lo + 20, f"w{lo}"),
                 path,
                 mode="append",
-                max_commit_retries=64,
             )
         except Exception as exc:  # pragma: no cover - surfaced below
             errs.append(exc)
@@ -2982,7 +3085,6 @@ def test_concurrent_eq_deletes_race_appends_linearizably(
                 path,
                 spark.range(0, 200).where(f"id % 10 = {mod}"),
                 ["id"],
-                max_commit_retries=64,
             )
         except Exception as exc:  # pragma: no cover - surfaced below
             errs.append(exc)
@@ -3079,6 +3181,7 @@ def test_concurrent_appends_race_cleanly_through_sharded_metadata(
     from nyc_taxi_data_ingestion_spark.sources import snapshots as S
 
     monkeypatch.setattr(S, "_SHARD_INLINE_MAX", 2)
+    monkeypatch.setattr(S, "_COMMIT_RETRIES", 64)
     path = str(tmp_path / "t")
     S.snapshot_write(_frame(spark, 0, 10, "seed").repartition(2), path)
     S.snapshot_branch(path, "side")
@@ -3090,7 +3193,6 @@ def test_concurrent_appends_race_cleanly_through_sharded_metadata(
                 _frame(spark, lo, lo + 10, f"w{lo}").repartition(2),
                 path,
                 mode="append",
-                max_commit_retries=64,
             )
         except Exception as exc:  # pragma: no cover - surfaced below
             errs.append(exc)
@@ -3102,7 +3204,6 @@ def test_concurrent_appends_race_cleanly_through_sharded_metadata(
                 path,
                 mode="append",
                 branch="side",
-                max_commit_retries=64,
             )
         except Exception as exc:  # pragma: no cover - surfaced below
             errs.append(exc)
