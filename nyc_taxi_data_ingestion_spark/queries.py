@@ -10678,6 +10678,8 @@ def q_snapshot_projected_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nyc_taxi_data_ingestion_spark.sources import snapshots as S
     from nyc_taxi_data_ingestion_spark.sources.pydatasource import (
         SnapshotBatchReader,
+        _needed_physical,
+        _surviving_row_groups,
         register_snapshot_format,
     )
 
@@ -10736,8 +10738,11 @@ def q_snapshot_projected_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         r.pushFilters([LessThanOrEqual(("o_orderkey",), hi)])
         (part,) = [p for p in r.partitions() if p.file_abs]
         pf = pq.ParquetFile(part.file_abs)
-        groups, _offs = r._surviving_row_groups(
-            pf, r._needed_physical(part)
+        groups, _offs = _surviving_row_groups(
+            pf,
+            _needed_physical(part, None, r._preds, r._nulls),
+            r._preds,
+            r._nulls,
         )
         if pf.metadata.num_row_groups < n_groups or len(groups) > 3:
             raise RuntimeError(

@@ -473,11 +473,13 @@ def _strict_date(v: str):
 
 def _typed_partition_value(raw, pa_type):
     """One raw dir value as the python scalar matching the inferred
-    Arrow type (None passes through). Only int/float/string partition
-    types are reconstructible from path values; anything else (a
-    date32 pinned by a flat commit's in-file column, a bool) raises
-    with the read-path alternative named — a loud limitation beats
-    silently nulling or corrupting a value that exists."""
+    Arrow type (None passes through): int/float/date/string partition
+    types — everything :func:`_infer_partition_fields` infers — are
+    reconstructed from path values (dates from ISO yyyy-MM-dd); any
+    other type (a bool or timestamp pinned by a flat commit's in-file
+    column) raises with the read-path alternative named — a loud
+    limitation beats silently nulling or corrupting a value that
+    exists."""
     import pyarrow as pa
 
     if raw is None:
@@ -532,6 +534,229 @@ def _attach_partition_columns(batch, part_fields, part_values):
         )
         fields.append(f)
     return pa.RecordBatch.from_arrays(cols, schema=pa.schema(fields))
+
+
+def _partition_bounds(part_values: dict, part_types: dict) -> dict:
+    """A file's Hive partition values as stats entries, so pushed
+    conjuncts prune partitions through the same
+    ``snapshots._file_provably_empty`` rule as recorded stats (Hive
+    partition pruning through the format API): a value is an exact
+    ``[v, v]`` bound with zero nulls; a NULL dir is all-NULL by
+    construction, so range conjuncts and IS NOT NULL prove it out and
+    IS NULL keeps exactly it (the num_rows=1 stand-in only needs the
+    all/none distinction the prune rules test). Columns outside the
+    table schema and malformed dir values give no bound (file kept)."""
+    out = {}
+    for k, raw in part_values.items():
+        if k not in part_types:
+            continue
+        if raw is None:
+            out[k] = (None, None, 1, 1)
+            continue
+        try:
+            tv = _typed_partition_value(raw, part_types[k])
+        except ValueError:
+            continue
+        out[k] = (tv, tv, 0, 1)
+    return out
+
+
+def _file_partitions(path: str, plan: dict, keep=None) -> list:
+    """One :class:`_FilePartition` per data file of a
+    ``snapshots._scan_plan`` — both snapshot readers' planning step.
+    Each carries the plan's positional-delete files (the task loads
+    the positions for ITS file), its commit's schema-log ops and the
+    equality deletes scoped to its commit. ``keep(part_values)``
+    (optional) drops files on their partition-path values."""
+    parts = []
+    for rel, files in sorted(plan["commits"].items()):
+        for f in files:
+            pv = _partition_values(f)
+            if keep is None or keep(pv):
+                parts.append(
+                    _FilePartition(
+                        os.path.join(path, rel, f),
+                        pv,
+                        file_rel=f"{rel}/{f}",
+                        delete_files=plan["delete_files"],
+                        schema_ops=plan["ops"].get(rel),
+                        eq_deletes=plan["eq_scope"][rel],
+                    )
+                )
+    return parts
+
+
+def _needed_physical(partition, arrow_schema, preds, nulls) -> dict:
+    """logical → in-file physical name for every column a task touches
+    (pruning conjuncts, the negotiated projection, eq-delete keys),
+    via THE shared reverse walk (snapshots._physical_in_ops) — None
+    when the logical has no physical backing in this dir (dropped /
+    renamed-away lineage: its value here is NULL, so neither stale
+    stats nor stale data may serve it). Computed ONCE per task and
+    shared by row-group pruning and decode projection."""
+    logicals = {c for c, _lo, _hi in preds} | set(nulls)
+    if arrow_schema is not None:
+        logicals |= {f.name for f in arrow_schema}
+    for _files, cols in partition.eq_deletes:
+        logicals |= set(cols)
+    ops = partition.schema_ops
+    return {c: _S._physical_in_ops(ops, c) for c in logicals}
+
+
+def _surviving_row_groups(pf, phys_of: dict, preds, nulls):
+    """ROW-GROUP pruning inside a kept file: the task-side twin of the
+    manifest-bounds file skip — Spark's native parquet reader
+    row-group-prunes on pushed filters, and the format source must
+    match or a selective scan reads whole 128 MB files for a
+    one-row-group answer. Returns (surviving group indices, group
+    start offsets). Exclusion reuses THE shared predicates
+    (bounds_exclude / null_count_exclude): parquet-truncated string
+    maxima stay valid upper bounds, incomparable types keep, and the
+    FLOAT NaN rule mirrors commit-time stats recording
+    (snapshots._collect_file_stats): Spark orders NaN greatest,
+    parquet-mr signals NaN presence as max=NaN while arrow-cpp
+    silently EXCLUDES it from min/max — so for float columns from
+    non-mr writers the upper bound is voided (min pruning stays
+    NaN-sound), an mr NaN max voids the upper bound, and a NaN min
+    (all-NaN group) voids both sides. Conservative-safe throughout,
+    and Spark re-evaluates every filter on the returned rows anyway."""
+    import math
+
+    md = pf.metadata
+    offsets, off = [], 0
+    for i in range(md.num_row_groups):
+        offsets.append(off)
+        off += md.row_group(i).num_rows
+    if md.num_row_groups <= 1 or not (preds or nulls):
+        return list(range(md.num_row_groups)), offsets
+    col_idx = {
+        md.schema.column(j).name: j for j in range(md.num_columns)
+    }
+    mr_writer = (md.created_by or "").startswith("parquet-mr")
+    conjuncts = [(c, lo, hi, None) for c, lo, hi in preds] + [
+        (c, None, None, isn) for c, isn in nulls.items()
+    ]
+    keep, kept_offsets = [], []
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        excluded = False
+        for col, lo, hi, isn in conjuncts:
+            phys = phys_of.get(col)
+            j = col_idx.get(phys) if phys is not None else None
+            if j is None:
+                continue
+            st = rg.column(j).statistics
+            if st is None:
+                continue
+            nc = st.null_count if st.has_null_count else None
+            mn, mx = (st.min, st.max) if st.has_min_max else (None, None)
+            if md.schema.column(j).physical_type in ("FLOAT", "DOUBLE"):
+                if isinstance(mn, float) and math.isnan(mn):
+                    mn = mx = None  # all-NaN group: no sound side
+                elif not mr_writer or (
+                    isinstance(mx, float) and math.isnan(mx)
+                ):
+                    mx = None  # NaN rows may exist above max
+            bounds = [mn, mx, nc, rg.num_rows]
+            if isn is None:
+                if _S.bounds_exclude(bounds, lo, hi):
+                    excluded = True
+                    break
+            elif _S.null_count_exclude(bounds, isn):
+                excluded = True
+                break
+        if not excluded:
+            keep.append(i)
+            kept_offsets.append(offsets[i])
+    return keep, kept_offsets
+
+
+def _arrow_batches(
+    partition, arrow_schema, full_schema=None, preds=(), nulls=None
+):
+    """THE per-file Arrow read both snapshot readers run task-side.
+    Row groups the pushed conjuncts (``preds``/``nulls``, the batch
+    reader's; a stream passes none) prove empty are skipped; only the
+    file columns ``arrow_schema`` and eq-delete keys need are decoded
+    (the Python DataSource protocol has no column-pruning hook, so
+    this is where a narrow ``.option('columns')`` projection stops
+    paying full decode). Each batch is then masked (positional
+    deletes), renamed (schema ops), extended (partition columns),
+    masked again (equality deletes, whose keys now carry logical
+    names and path-encoded values) and conformed to ``arrow_schema``.
+    ``full_schema`` is the unprojected table schema, typing
+    partition-path eq keys that the projection leaves out."""
+    import pyarrow.parquet as pq
+
+    if not partition.file_abs:
+        return
+    nulls = nulls or {}
+    part_fields = (
+        [f for f in arrow_schema if f.name in partition.part_values]
+        if arrow_schema is not None
+        else []
+    )
+    dels = (
+        _deleted_positions(partition.delete_files, partition.file_rel)
+        if partition.delete_files
+        else None
+    )
+    eq_sets = (
+        _eq_key_sets(partition.eq_deletes) if partition.eq_deletes else None
+    )
+    pf = pq.ParquetFile(partition.file_abs)
+    phys_of = _needed_physical(partition, arrow_schema, preds, nulls)
+    groups, offsets = _surviving_row_groups(pf, phys_of, preds, nulls)
+    eq_cols = [c for _files, cols in partition.eq_deletes for c in cols]
+    # a column with no physical backing in this dir (path-encoded
+    # partition value, later-added or re-added lineage) is attached /
+    # conformed downstream; eq keys read here but outside the
+    # projection are dropped by the conform step AFTER masking
+    read_cols = None
+    if arrow_schema is not None:
+        in_file = set(pf.schema_arrow.names)
+        read_cols = [
+            phys
+            for logical in dict.fromkeys(arrow_schema.names + eq_cols)
+            if (phys := phys_of.get(logical)) is not None
+            and phys in in_file
+        ]
+    # eq-delete keys that live in the PARTITION PATH must be attached
+    # for masking even when the projection excludes them (a projected
+    # read otherwise resurrected every row eq-deleted by a
+    # partition-column key); the conform step drops them after the mask
+    if eq_sets and partition.part_values:
+        have = {f.name for f in part_fields}
+        src = full_schema if full_schema is not None else arrow_schema
+        part_fields = part_fields + [
+            f
+            for f in src or []
+            if f.name in partition.part_values
+            and f.name in eq_cols
+            and f.name not in have
+        ]
+    # per-group iteration with TRUE start offsets: positional delete
+    # vectors key on file-global row position, so a skipped group must
+    # not shift later groups' positions
+    for g, offset in zip(groups, offsets):
+        for b in pf.iter_batches(row_groups=[g], columns=read_cols):
+            n = b.num_rows
+            if dels is not None:
+                b = _mask_deleted(b, dels, offset)
+            offset += n
+            if partition.schema_ops:
+                b = _apply_schema_ops(b, partition.schema_ops)
+            if part_fields:
+                b = _attach_partition_columns(
+                    b, part_fields, partition.part_values
+                )
+            if eq_sets:
+                b = _mask_eq_deleted(b, eq_sets)
+            yield (
+                _conform_batch(b, arrow_schema)
+                if arrow_schema is not None
+                else b
+            )
 
 
 def _table_arrow_schema(path: str, manifest: dict):
@@ -620,18 +845,21 @@ class SnapshotStreamReader(DataSourceStreamReader):
       exactly from the manifests).
     - ``partitions(start, end)`` plans ONE InputPartition per fresh
       data file between the two versions (metadata-only, from
-      manifests); every surviving manifest in the window must be an
-      ``append`` — a rewrite (merge/compact/overwrite/rollback) makes
-      incremental tailing unsound and raises, the
-      ``read_appends_between`` contract.
+      manifests, through snapshots._window_plan — the plan
+      ``read_appends_between`` reads); every surviving manifest in
+      the window must be an ``append`` — a rewrite
+      (merge/compact/overwrite/rollback) makes incremental tailing
+      unsound and raises.
     - ``read`` streams the file's row groups as Arrow batches
-      (executor-side pyarrow; the driver never touches data).
+      (executor-side pyarrow through :func:`_arrow_batches`, the
+      per-file read it shares with the batch reader; the driver never
+      touches data).
 
     Partitioned (Hive-layout) tables stream whole: the partition
     columns their files don't carry are reconstructed from the
     directory-encoded values and attached as constant Arrow columns
     per file (typing via _infer_partition_fields at schema time —
-    int32/int64/float64/string)."""
+    int32/int64/float64, date32 for ISO dates, else string)."""
 
     def __init__(self, path: str, arrow_schema=None,
                  starting_version: int = 0,
@@ -768,14 +996,14 @@ class SnapshotStreamReader(DataSourceStreamReader):
         # the inverted-window poison pill below becomes unreachable
         # short of a hint-write failing AND the process dying mid-batch
         self._persist_hint(ev)
-        # planning + append-only validation SHARED with the batch
-        # incremental path (snapshots.fresh_append_commits) — the two
-        # consumers can never drift on window semantics. The lineage
-        # ref comes from this trigger's latestOffset (cached there);
-        # a branch stream keeps validating against its branch until
-        # the ref is dropped (published), then falls back to main,
-        # where the appends_only fast-forward window admits and the
-        # diff yields exactly the unconsumed dirs. A WAL-replayed
+        # planning + append-only validation + the bootstrap rule are
+        # SHARED with the batch incremental path (snapshots._window_plan)
+        # — the two consumers can never drift on window semantics. The
+        # lineage ref comes from this trigger's latestOffset (cached
+        # there); a branch stream keeps validating against its branch
+        # until the ref is dropped (published), then falls back to
+        # main, where the appends_only fast-forward window admits and
+        # the diff yields exactly the unconsumed dirs. A WAL-replayed
         # batch on restart (partitions before any latestOffset)
         # resolves fresh.
         ref = (
@@ -784,143 +1012,48 @@ class SnapshotStreamReader(DataSourceStreamReader):
             else self._lineage()[0]
         )
         try:
-            _, fresh = _S.fresh_append_commits(self._path, sv, ev, ref=ref)
+            plan = _S._window_plan(self._path, sv, ev, ref=ref)
         except ValueError as exc:
             raise ValueError(
                 f"snapshot_stream: {exc} — restart the stream from a "
                 "fresh checkpoint (bootstrap re-reads the head)"
             ) from exc
-        # merge-on-read: the BOOTSTRAP window is the head STATE, so its
-        # delete vectors apply (a raw file read would resurrect deleted
-        # rows); past the bootstrap no vector can exist in the window —
-        # fresh_append_commits refuses to tail across a delete op
-        delete_files = []
-        eq_entries: list = []
-        schema_log = None
-        if sv == 0:
-            head_m = _S._load_manifest(self._path, ev)
-            dels = head_m.get("deletes") or {}
-            delete_files = [
-                os.path.join(self._path, drel, df)
-                for drel, dfs in sorted(dels.items())
-                for df in dfs
-            ]
-            # equality deletes apply at BOOTSTRAP exactly like vectors
-            # (the window is the head STATE); past it no eq entry can
-            # exist in a window — fresh_append_commits refuses to tail
-            # across an eq-delete/eq-upsert commit
-            eq_entries = [
-                (
-                    set(ent.get("applies_to") or []),
-                    [
-                        os.path.join(self._path, drel, f)
-                        for f in ent["files"]
-                    ],
-                    list(ent["cols"]),
-                )
-                for drel, ent in sorted(
-                    (head_m.get("eq_deletes") or {}).items()
-                )
-            ]
-            # only the bootstrap window can hold PRE-evolution commits
-            # (fresh_append_commits refuses to tail across a 'schema'
-            # commit, so later windows' dirs postdate every log entry)
-            schema_log = head_m.get("schema_log")
-            # staleness guard: Spark pinned this stream's schema at
-            # definition time; an evolution committed since would make
-            # the conform step silently NULL a renamed column (its new
-            # name is absent from the pinned schema) or resurrect a
-            # dropped one. Raise instead — the checkpointed-restart
-            # path already raises via the append-only window rule;
-            # without this the BOOTSTRAP was the one silent hole.
-            if schema_log and self._arrow_schema is not None:
-                pinned = {f.name for f in self._arrow_schema}
-                logical = None
-                for e in schema_log:
-                    stale = e["op"] == "rename" and e["to"] not in pinned
-                    if not stale and e["op"] == "drop":
-                        if logical is None:
-                            logical = set(
-                                _S._logical_columns(self._path, head_m)
-                            )
-                        # in-pinned but no longer logical = dropped
-                        # after definition (a re-added name is logical
-                        # again and streams fine)
-                        stale = (
-                            e["column"] in pinned
-                            and e["column"] not in logical
+        # only the bootstrap window (the head STATE) carries a schema
+        # log. Staleness guard: Spark pinned this stream's schema at
+        # definition time; an evolution committed since would make
+        # the conform step silently NULL a renamed column (its new
+        # name is absent from the pinned schema) or resurrect a
+        # dropped one. Raise instead — the checkpointed-restart path
+        # already raises via the append-only window rule; without this
+        # the BOOTSTRAP was the one silent hole.
+        schema_log = plan["manifest"].get("schema_log")
+        if schema_log and self._arrow_schema is not None:
+            pinned = {f.name for f in self._arrow_schema}
+            logical = None
+            for e in schema_log:
+                stale = e["op"] == "rename" and e["to"] not in pinned
+                if not stale and e["op"] == "drop":
+                    if logical is None:
+                        logical = set(
+                            _S._logical_columns(self._path, plan["manifest"])
                         )
-                    if stale:
-                        raise ValueError(
-                            "snapshot_stream: the table's schema "
-                            "evolved after this stream was defined "
-                            f"(a {e['op']} postdates the pinned "
-                            "schema) — restart the stream so it "
-                            "re-resolves the logical schema"
-                        )
-        parts = []
-        for rel, files in sorted(fresh.items()):
-            ops = _S._schema_ops_for_commit(schema_log, rel)
-            eq_scope = [
-                (fs, cols) for ap, fs, cols in eq_entries if rel in ap
-            ]
-            for f in files:
-                parts.append(
-                    _FilePartition(
-                        os.path.join(self._path, rel, f),
-                        _partition_values(f),
-                        file_rel=f"{rel}/{f}",
-                        delete_files=delete_files,
-                        schema_ops=ops,
-                        eq_deletes=eq_scope,
+                    # in-pinned but no longer logical = dropped after
+                    # definition (a re-added name is logical again and
+                    # streams fine)
+                    stale = (
+                        e["column"] in pinned and e["column"] not in logical
                     )
-                )
-        return parts
+                if stale:
+                    raise ValueError(
+                        "snapshot_stream: the table's schema evolved "
+                        f"after this stream was defined (a {e['op']} "
+                        "postdates the pinned schema) — restart the "
+                        "stream so it re-resolves the logical schema"
+                    )
+        return _file_partitions(self._path, plan)
 
     def read(self, partition: _FilePartition):
-        import pyarrow.parquet as pq
-
-        part_fields = (
-            [
-                f
-                for f in self._arrow_schema
-                if f.name in partition.part_values
-            ]
-            if self._arrow_schema is not None
-            else []
-        )
-        dels = (
-            _deleted_positions(partition.delete_files, partition.file_rel)
-            if partition.delete_files
-            else None
-        )
-        eq_sets = (
-            _eq_key_sets(partition.eq_deletes)
-            if partition.eq_deletes
-            else None
-        )
-        pf = pq.ParquetFile(partition.file_abs)
-        offset = 0
-        for b in pf.iter_batches():
-            n = b.num_rows
-            if dels is not None:
-                b = _mask_deleted(b, dels, offset)
-            offset += n
-            if partition.schema_ops:
-                b = _apply_schema_ops(b, partition.schema_ops)
-            if part_fields:
-                b = _attach_partition_columns(
-                    b, part_fields, partition.part_values
-                )
-            if eq_sets:
-                # after ops + partition attach: key columns are in
-                # their logical names and path-encoded keys resolve
-                b = _mask_eq_deleted(b, eq_sets)
-            yield (
-                _conform_batch(b, self._arrow_schema)
-                if self._arrow_schema is not None
-                else b
-            )
+        return _arrow_batches(partition, self._arrow_schema)
 
     def commit(self, end: dict) -> None:
         # exactly-once progress lives in the Spark checkpoint; with a
@@ -1083,11 +1216,12 @@ def _has_nan(vs) -> bool:
 
 class SnapshotBatchReader(DataSourceReader):
     """Manifest-planned batch reader with FILE-LEVEL FILTER PUSHDOWN:
-    ``pushFilters`` intersects Spark's comparison filters with the
-    manifest's per-file column bounds (``snapshot_write(stats_cols=)``)
-    and drops proven-empty files from the plan — the same data skipping
-    ``scan_snapshot`` does, surfaced through the engine's own pushdown
-    hook so ANY ``df.filter(...)`` benefits without a special API. All
+    ``pushFilters`` turns Spark's comparison and null filters into the
+    conjuncts of ``snapshots._scan_plan``, which drops files the
+    manifest's per-file bounds (``snapshot_write(stats_cols=)``) prove
+    empty — the very plan ``scan_snapshot`` reads, surfaced through the
+    engine's own pushdown hook so ANY ``df.filter(...)`` benefits
+    without a special API; partition-path values prune on top. All
     filters are returned as unhandled (Spark still evaluates them), so
     pruning is advisory-safe: strict/non-strict edges and files
     without bounds can only KEEP extra files, never drop live rows."""
@@ -1104,21 +1238,9 @@ class SnapshotBatchReader(DataSourceReader):
         # masking-only columns (eq keys in the partition path) keep
         # their true types
         self._full_schema = full_schema
-        self._lo: dict = {}
-        self._hi: dict = {}
-        self._null: dict = {}  # col -> True (IS NULL) / False (IS NOT NULL)
-
-    def _tighten(self, col, lo=None, hi=None):
-        """Intersect a [lo, hi] hull into the accumulated per-column
-        range (either side optional) — incomparable mixed types keep
-        the looser constraint rather than crash the planner."""
-        try:
-            if lo is not None:
-                self._lo[col] = max(self._lo.get(col, lo), lo)
-            if hi is not None:
-                self._hi[col] = min(self._hi.get(col, hi), hi)
-        except TypeError:
-            pass
+        # the pushed conjuncts in snapshots._scan_plan's two forms
+        self._preds: list = []  # (col, lo, hi) range conjuncts
+        self._nulls: dict = {}  # col -> True (IS NULL) / False (NOT NULL)
 
     def pushFilters(self, filters):
         from pyspark.sql.datasource import (
@@ -1143,11 +1265,8 @@ class SnapshotBatchReader(DataSourceReader):
             # for every referenced column, so recorded null counts
             # (Iceberg's null_value_counts) prune all-null files on
             # ANY filtered read, not just explicit isNotNull calls
-            if isinstance(f, IsNull):
-                self._null[col] = True
-                continue
-            if isinstance(f, IsNotNull):
-                self._null[col] = False
+            if isinstance(f, (IsNull, IsNotNull)):
+                self._nulls[col] = isinstance(f, IsNull)
                 continue
             if isinstance(f, In):
                 # In carries its value SET in .value (a tuple)
@@ -1166,7 +1285,7 @@ class SnapshotBatchReader(DataSourceReader):
                     # whose range meets [min(vs), max(vs)] (gaps inside
                     # the hull only KEEP extra files)
                     try:
-                        self._tighten(col, lo=min(vs), hi=max(vs))
+                        self._preds.append((col, min(vs), max(vs)))
                     except TypeError:
                         pass  # mixed incomparable literals: keep
                 continue
@@ -1177,9 +1296,9 @@ class SnapshotBatchReader(DataSourceReader):
                 # matches NaN rows, which can live in any file — same
                 # guard as the In hull)
                 if v is None:
-                    self._null[col] = True
+                    self._nulls[col] = True
                 elif not _has_nan((v,)):
-                    self._tighten(col, lo=v, hi=v)
+                    self._preds.append((col, v, v))
                 continue
             if v is None or _has_nan((v,)):
                 # a NaN comparison literal: Spark orders NaN greatest
@@ -1188,345 +1307,57 @@ class SnapshotBatchReader(DataSourceReader):
                 # void the NaN side — no sound hull exists, keep all
                 continue
             if isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                self._tighten(col, lo=v)
+                self._preds.append((col, v, None))
             elif isinstance(f, (LessThan, LessThanOrEqual)):
-                self._tighten(col, hi=v)
+                self._preds.append((col, None, v))
             elif isinstance(f, EqualTo):
-                self._tighten(col, lo=v, hi=v)
+                self._preds.append((col, v, v))
             elif isinstance(f, StringStartsWith) and isinstance(v, str) and v:
                 # startswith(p) ⇒ p <= col < p+ε: the lower bound is
                 # exact; the upper is the prefix with its last char
-                # bumped (skipped at the codepoint ceiling — looser is
+                # bumped (dropped at the codepoint ceiling — looser is
                 # only ever conservative)
-                self._tighten(col, lo=v)
                 last = ord(v[-1])
-                if last < 0x10FFFF:
-                    self._tighten(col, hi=v[:-1] + chr(last + 1))
+                hi = v[:-1] + chr(last + 1) if last < 0x10FFFF else None
+                self._preds.append((col, v, hi))
         return filters  # Spark applies everything; pruning is bonus
 
-    def _keep(self, bounds_by_col: dict) -> bool:
-        for col in set(self._lo) | set(self._hi):
-            if _S.bounds_exclude(
-                bounds_by_col.get(col),
-                self._lo.get(col),
-                self._hi.get(col),
-            ):
-                return False
-        for col, is_null in self._null.items():
-            if _S.null_count_exclude(bounds_by_col.get(col), is_null):
-                return False
-        return True
-
-    def _part_fields(self, part_values: dict) -> list:
-        """The negotiated schema's fields for this file's path-encoded
-        partition columns — read-time typing comes from the schema the
-        source already published, never re-inferred per file."""
-        if self._arrow_schema is None:
-            return []
-        return [
-            f for f in self._arrow_schema if f.name in part_values
-        ]
-
     def partitions(self):
-        import os
-
+        # the plan resolves a COPY of the pinned RAW manifest AFTER
+        # pushFilters, so the pushed ranges skip whole manifest shards
+        # via their descriptor summaries (never read off disk), and
+        # the pinned dict stays raw for any other scan of this source
+        plan = _S._scan_plan(
+            self._path,
+            self._manifest.get("version"),
+            self._preds,
+            self._nulls,
+            manifest=self._manifest,
+        )
+        self._shard_plan = {k: plan[k] for k in _S._PRUNE_COUNTERS}
         part_types = (
             {f.name: f.type for f in self._arrow_schema}
             if self._arrow_schema is not None
             else {}
         )
-        # LAZY shard resolution (r11): the reader receives the RAW
-        # manifest and resolves here, AFTER pushFilters — so the
-        # accumulated per-column hulls skip whole manifest shards via
-        # their descriptor summaries (never read off disk), and a
-        # selective filtered read plans from O(surviving shards) of
-        # metadata. A pre-resolved manifest (engine paths, tests)
-        # passes through untouched; stats/deletes/schema-log handling
-        # below is unchanged either way.
-        prune = [
-            (c, self._lo.get(c), self._hi.get(c))
-            for c in set(self._lo) | set(self._hi)
-        ]
-        self._shard_plan: dict = {}
-        # resolve a COPY: _resolve_manifest materializes in place and
-        # its 'commits'-present early return would make any second
-        # resolution a no-op — if the DataSource-pinned dict were
-        # resolved here, another scan with different pushed filters
-        # would plan from THIS scan's pruned file inventory and
-        # silently drop rows (r11 ADVICE). The pinned manifest must
-        # stay raw; each reader owns its own pruned view.
-        self._manifest = _S._resolve_manifest(
-            self._path, dict(self._manifest), prune=prune,
-            plan_out=self._shard_plan,
+        parts = _file_partitions(
+            self._path,
+            plan,
+            lambda pv: not _S._file_provably_empty(
+                _partition_bounds(pv, part_types), self._preds, self._nulls
+            ),
         )
-        stats = self._manifest.get("stats") or {}
-        # merge-on-read: ship the version's delete parquet list with
-        # every partition; each task loads positions for its own file.
-        # Deleted rows never widen a file's recorded bounds, so stats
-        # pruning below stays conservative-correct.
-        delete_files = [
-            os.path.join(self._path, drel, df)
-            for drel, dfs in sorted(
-                (self._manifest.get("deletes") or {}).items()
-            )
-            for df in dfs
-        ]
-        schema_log = self._manifest.get("schema_log")
-        # equality deletes ship with every data file their applies_to
-        # scope names (sequence rule resolved at planning): the task
-        # loads the small key sets and masks matches — same contract
-        # as positional vectors, zero cost for eq-free tables
-        eq_entries = [
-            (
-                set(ent.get("applies_to") or []),
-                [
-                    os.path.join(self._path, drel, f)
-                    for f in ent["files"]
-                ],
-                list(ent["cols"]),
-            )
-            for drel, ent in sorted(
-                (self._manifest.get("eq_deletes") or {}).items()
-            )
-        ]
-        parts = []
-        for rel, files in sorted(self._manifest["commits"].items()):
-            cstats = stats.get(rel) or {}
-            ops = _S._schema_ops_for_commit(schema_log, rel)
-            eq_scope = [
-                (fs, cols) for ap, fs, cols in eq_entries if rel in ap
-            ]
-            for f in files:
-                pv = _partition_values(f)
-                bounds = dict(cstats.get(f) or {})
-                # recorded bounds are keyed by write-time PHYSICAL
-                # names; pushed filters use logical names — replay the
-                # commit's schema ops over the bound keys (a dropped
-                # column's bounds vanish: its logical twin is a later
-                # re-add this file holds only NULLs for)
-                if ops:
-                    bounds = dict(
-                        _S._replay_schema_ops(bounds.items(), ops)
-                    )
-                # a file's partition value is an exact [v, v] bound
-                # with zero nulls — pushFilters prunes on partition
-                # columns through the SAME rule as recorded stats
-                # (Hive partition pruning through the format API); a
-                # NULL partition is all-NULL by construction, so range
-                # conjuncts and IS NOT NULL prove it out and IS NULL
-                # keeps exactly it (the num_rows=1 stand-in only needs
-                # the all/none distinction the prune rules test)
-                for k, raw in pv.items():
-                    if k not in part_types:
-                        continue
-                    if raw is None:
-                        bounds.setdefault(k, (None, None, 1, 1))
-                        continue
-                    try:
-                        tv = _typed_partition_value(raw, part_types[k])
-                    except ValueError:
-                        continue  # malformed dir value: keep file
-                    bounds.setdefault(k, (tv, tv, 0, 1))
-                if self._keep(bounds):
-                    parts.append(
-                        _FilePartition(
-                            os.path.join(self._path, rel, f),
-                            pv,
-                            file_rel=f"{rel}/{f}",
-                            delete_files=delete_files,
-                            schema_ops=ops,
-                            eq_deletes=eq_scope,
-                        )
-                    )
         # an all-pruned plan still needs >=1 partition for an empty scan
         return parts or [_FilePartition("")]
 
-    def _needed_physical(self, partition) -> dict:
-        """logical → in-file physical name for every column this task
-        touches (pruning conjuncts, the negotiated projection,
-        eq-delete keys), via THE shared reverse walk
-        (snapshots._physical_in_ops) — None when the logical has no
-        physical backing in this dir (dropped / renamed-away lineage:
-        its value here is NULL, so neither stale stats nor stale data
-        may serve it). Computed ONCE per task and shared by row-group
-        pruning and decode projection (r12 review: the forward-replay
-        name fallback resurrected stale physical columns for re-added
-        logicals, pruning every IS NULL match)."""
-        logicals = set(self._lo) | set(self._hi) | set(self._null)
-        if self._arrow_schema is not None:
-            logicals |= {f.name for f in self._arrow_schema}
-        for _files, cols in partition.eq_deletes or []:
-            logicals |= set(cols)
-        ops = partition.schema_ops
-        return {c: _S._physical_in_ops(ops, c) for c in logicals}
-
-    def _surviving_row_groups(self, pf, phys_of: dict):
-        """ROW-GROUP pruning inside a kept file (r12): the task-side
-        twin of the manifest-bounds file skip — Spark's native parquet
-        reader row-group-prunes on pushed filters, and this source
-        must match or a selective scan reads whole 128 MB files for a
-        one-row-group answer. Returns (surviving group indices, group
-        start offsets). Exclusion reuses THE shared predicates
-        (bounds_exclude / null_count_exclude): parquet-truncated
-        string maxima stay valid upper bounds, incomparable types
-        keep, and the FLOAT NaN rule mirrors commit-time stats
-        recording (snapshots._collect_file_stats): Spark orders NaN
-        greatest, parquet-mr signals NaN presence as max=NaN while
-        arrow-cpp silently EXCLUDES it from min/max — so for float
-        columns from non-mr writers the upper bound is voided (min
-        pruning stays NaN-sound), an mr NaN max voids the upper
-        bound, and a NaN min (all-NaN group) voids both sides.
-        Conservative-safe throughout, and Spark re-evaluates every
-        filter on the returned rows anyway."""
-        import math
-
-        md = pf.metadata
-        offsets, off = [], 0
-        for i in range(md.num_row_groups):
-            offsets.append(off)
-            off += md.row_group(i).num_rows
-        if md.num_row_groups <= 1 or not (
-            self._lo or self._hi or self._null
-        ):
-            return list(range(md.num_row_groups)), offsets
-        col_idx = {
-            md.schema.column(j).name: j for j in range(md.num_columns)
-        }
-        mr_writer = (md.created_by or "").startswith("parquet-mr")
-        conjuncts = [
-            (c, self._lo.get(c), self._hi.get(c), None)
-            for c in set(self._lo) | set(self._hi)
-        ] + [(c, None, None, isn) for c, isn in self._null.items()]
-        keep, kept_offsets = [], []
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            excluded = False
-            for col, lo, hi, isn in conjuncts:
-                phys = phys_of.get(col)
-                j = col_idx.get(phys) if phys is not None else None
-                if j is None:
-                    continue
-                st = rg.column(j).statistics
-                if st is None:
-                    continue
-                nulls = st.null_count if st.has_null_count else None
-                mn, mx = (
-                    (st.min, st.max) if st.has_min_max else (None, None)
-                )
-                if md.schema.column(j).physical_type in (
-                    "FLOAT",
-                    "DOUBLE",
-                ):
-                    if isinstance(mn, float) and math.isnan(mn):
-                        mn = mx = None  # all-NaN group: no sound side
-                    elif not mr_writer or (
-                        isinstance(mx, float) and math.isnan(mx)
-                    ):
-                        mx = None  # NaN rows may exist above max
-                bounds = [mn, mx, nulls, rg.num_rows]
-                if isn is None:
-                    if _S.bounds_exclude(bounds, lo, hi):
-                        excluded = True
-                        break
-                elif _S.null_count_exclude(bounds, isn):
-                    excluded = True
-                    break
-            if not excluded:
-                keep.append(i)
-                kept_offsets.append(offsets[i])
-        return keep, kept_offsets
-
     def read(self, partition: _FilePartition):
-        import pyarrow.parquet as pq
-
-        if not partition.file_abs:
-            return
-        part_fields = self._part_fields(partition.part_values)
-        dels = (
-            _deleted_positions(partition.delete_files, partition.file_rel)
-            if partition.delete_files
-            else None
+        return _arrow_batches(
+            partition,
+            self._arrow_schema,
+            self._full_schema,
+            self._preds,
+            self._nulls,
         )
-        eq_sets = (
-            _eq_key_sets(partition.eq_deletes)
-            if partition.eq_deletes
-            else None
-        )
-        pf = pq.ParquetFile(partition.file_abs)
-        phys_of = self._needed_physical(partition)
-        groups, offsets = self._surviving_row_groups(pf, phys_of)
-        # DECODE-level column pruning (r12): read only the file
-        # columns the negotiated schema (the .option('columns')
-        # projection) and eq-delete key masking need — the protocol
-        # has no pruning hook, so this is where a wide table stops
-        # paying full decode for a narrow projection. A column with
-        # no physical backing in this dir (path-encoded partition
-        # value, later-added or re-added lineage) is attached /
-        # conformed downstream as before, and eq keys read here but
-        # outside the projection are dropped by the conform step
-        # AFTER masking.
-        read_cols = None
-        if self._arrow_schema is not None:
-            need = [f.name for f in self._arrow_schema]
-            for _files, cols in partition.eq_deletes or []:
-                need.extend(cols)
-            in_file = set(pf.schema_arrow.names)
-            read_cols = [
-                phys
-                for logical in dict.fromkeys(need)
-                if (phys := phys_of.get(logical)) is not None
-                and phys in in_file
-            ]
-        # eq-delete keys that live in the PARTITION PATH must be
-        # attached for masking even when the projection excludes them
-        # (r12 review: a projected read otherwise resurrected every
-        # row eq-deleted by a partition-column key); the conform step
-        # drops them after the mask. Typing comes from the UNPROJECTED
-        # table schema the DataSource hands the reader.
-        if eq_sets and partition.part_values:
-            have = {f.name for f in part_fields}
-            eq_cols = {
-                c
-                for _files, cols in partition.eq_deletes or []
-                for c in cols
-            }
-            src = (
-                self._full_schema
-                if self._full_schema is not None
-                else self._arrow_schema
-            )
-            part_fields = part_fields + [
-                f
-                for f in (src or [])
-                if f.name in partition.part_values
-                and f.name in eq_cols
-                and f.name not in have
-            ]
-        # per-group iteration with TRUE start offsets: positional
-        # delete vectors key on file-global row position, so a skipped
-        # group must not shift later groups' positions
-        for g, g_off in zip(groups, offsets):
-            offset = g_off
-            for b in pf.iter_batches(row_groups=[g], columns=read_cols):
-                n = b.num_rows
-                if dels is not None:
-                    b = _mask_deleted(b, dels, offset)
-                offset += n
-                if partition.schema_ops:
-                    b = _apply_schema_ops(b, partition.schema_ops)
-                if part_fields:
-                    b = _attach_partition_columns(
-                        b, part_fields, partition.part_values
-                    )
-                if eq_sets:
-                    # after ops + partition attach: key columns are in
-                    # their logical names and path-encoded keys resolve
-                    b = _mask_eq_deleted(b, eq_sets)
-                yield (
-                    _conform_batch(b, self._arrow_schema)
-                    if self._arrow_schema is not None
-                    else b
-                )
 
 
 class SnapshotDataSource(DataSource):
@@ -1540,9 +1371,12 @@ class SnapshotDataSource(DataSource):
     attached per file, and PRUNED ON by pushFilters (a file's
     partition value is an exact [v, v] bound through the same
     bounds_exclude rule as recorded stats). Partition typing is
-    int32/int64/float64/string inference; date-typed partition columns
-    read as strings here (snapshots.read_snapshot gives Spark's own
-    typed inference)."""
+    int32/int64/float64 inference, date32 for ISO yyyy-MM-dd values
+    (as Spark's own inference types them), else string —
+    timestamp-looking values stay strings (snapshots.read_snapshot
+    gives Spark's typed inference). File planning is
+    snapshots._scan_plan, the one plan the engine reads and the prune
+    audit counts."""
 
     @classmethod
     def name(cls) -> str:

@@ -26,6 +26,23 @@ Design — a minimal Iceberg-shaped commit log, parquet-native:
   file list at planning time). On object storage this is the whole
   point: O(1) listing per read, no eventually-consistent LIST.
 
+Read planning: every read plans through ONE function
+(:func:`_scan_plan`, Iceberg scan planning). It takes a version, range
+conjuncts ``(col, lo, hi)`` and IS [NOT] NULL conjuncts ``{col:
+is_null}``, skips shards whose hulls prove them empty, prunes each
+commit's files on manifest stats (conjunct names translate to
+write-time physical names only through the reverse walk
+:func:`_physical_in_ops`), and attaches the positional-delete files,
+the equality deletes with their ``applies_to`` scope and each commit's
+schema-log ops. ``read_snapshot``, ``scan_snapshot``, the MoR writers'
+live-row read, compaction and the prune audit ``scan_prune_stats``
+(which returns the plan's counters) read it; so do both format
+readers, which add only the batch reader's partition-path bounds and
+one Arrow read per file. An incremental window (:func:`_window_plan`)
+is the plan of its fresh commits — of the head state for the
+bootstrap window. Spark runs only what comes after the plan: one
+``spark.read`` per commit dir and the delete anti-joins.
+
 Commit protocol: every writer runs ONE loop (:func:`_optimistic`,
 ``_COMMIT_RETRIES`` attempts), builds its manifest with ONE builder
 (:func:`_next_manifest`) and lands it in ONE step (:func:`_land`). An
@@ -2090,25 +2107,17 @@ def read_snapshot(
     listing, and partition columns parse/prune normally via
     ``basePath`` per commit dir."""
     version = _resolve_version(path, version, as_of_timestamp, tag, branch)
-    manifest = _load_manifest(path, version)
-    return _read_commits(
-        spark,
-        path,
-        manifest["commits"],
-        eq_deletes=manifest.get("eq_deletes"),
-        deletes=manifest.get("deletes"),
-        schema_log=manifest.get("schema_log"),
-    )
+    return _read_commits(spark, path, _scan_plan(path, version))
 
 
 def bounds_exclude(bounds, lower=None, upper=None) -> bool:
     """True iff a file whose recorded stats entry is ``bounds`` provably
     holds NO rows in ``lower <= col <= upper`` (either bound optional).
-    THE prune predicate — scan_snapshot, scan_prune_stats, and the
-    batch-format pushFilters path all call this one function, so the
-    audit can never disagree with the scan and an edge-semantics fix
-    lands once. Missing bounds or incomparable types → False (keep the
-    file): pruning must stay conservative.
+    THE prune predicate — the scan planner (so scan_snapshot,
+    scan_prune_stats and both format readers), shard skipping and the
+    format reader's row-group pruning all call this one function, so
+    an edge-semantics fix lands once. Missing bounds or incomparable
+    types → False (keep the file): pruning must stay conservative.
 
     An entry is ``[min, max]`` or ``[min, max, null_count, num_rows]``
     (r9, Iceberg's null_value_counts): an ALL-NULL column — which has
@@ -2141,8 +2150,9 @@ def null_count_exclude(bounds, is_null: bool) -> bool:
     """True iff a stats entry's recorded null counts prove the file
     empty for an ``IS NULL`` (``is_null=True``) or ``IS NOT NULL``
     (``False``) predicate — the null-pruning twin of
-    :func:`bounds_exclude`, shared by the programmatic scan's
-    ``not_null`` and the format source's pushed IsNull/IsNotNull.
+    :func:`bounds_exclude`, for the scan planner's ``{col: is_null}``
+    conjuncts (the programmatic scan's ``not_null``, the format
+    source's pushed IsNull/IsNotNull).
     Entries without null counts (pre-r9 manifests, files whose footer
     lacks them) keep the file."""
     if bounds is None or len(bounds) < 4:
@@ -2159,12 +2169,12 @@ def fresh_append_commits(
     to_version: int | None = None,
     ref: str | None = None,
 ) -> tuple[int, dict[str, list[str]]]:
-    """THE shared planning step for every incremental consumer (batch
-    ``read_appends_between`` and the ``snapshot_stream`` source):
-    resolve ``to_version`` (None → head) and return
-    ``(to_version, fresh_commits)`` — the commit dirs added in the
-    window ``(from_version, to_version]`` — after validating the
-    window is sound to consume incrementally.
+    """THE window validation of every incremental consumer (batch
+    ``read_appends_between`` and the ``snapshot_stream`` source, both
+    through :func:`_window_plan`): resolve ``to_version`` (None →
+    head) and return ``(to_version, fresh_commits)`` — the commit dirs
+    added in the window ``(from_version, to_version]`` — after
+    validating the window is sound to consume incrementally.
 
     ``from_version = 0`` is the BOOTSTRAP cursor: the increment is the
     head state's ENTIRE file set, which is sound regardless of what
@@ -2304,8 +2314,10 @@ def _norm_scan_predicates(column, lower, upper, predicates, not_null=None):
     """Shared argument normalization for the scan/audit pair: either
     the single-column (column, lower, upper) form or ``predicates`` —
     a list of (column, lower, upper) range conjuncts — never both.
-    Returns the conjunct list (empty when only ``not_null`` conjuncts
-    constrain the scan)."""
+    Returns ``(range conjuncts, {col: False} for each not_null col)``,
+    the two conjunct forms :func:`_scan_plan` takes (the range list is
+    empty when only ``not_null`` conjuncts constrain the scan)."""
+    nulls = {c: False for c in not_null or []}
     if predicates is not None:
         if column is not None or lower is not None or upper is not None:
             raise ValueError(
@@ -2318,47 +2330,176 @@ def _norm_scan_predicates(column, lower, upper, predicates, not_null=None):
                 "predicates must be a non-empty list of "
                 "(column, lower, upper) triples"
             )
-        return preds
+        return preds, nulls
     if column is None:
         if not_null:
-            return []
+            return [], nulls
         raise ValueError(
             "a column (or predicates=… / not_null=…) is required"
         )
-    return [(column, lower, upper)]
+    return [(column, lower, upper)], nulls
 
 
-def _file_provably_empty(file_stats: dict, preds, not_null=()) -> bool:
+def _file_provably_empty(file_stats: dict, preds, nulls=None) -> bool:
     """True iff ANY conjunct proves the file empty — range conjuncts
-    via :func:`bounds_exclude`, ``not_null`` columns via recorded null
-    counts (an all-null file holds no IS-NOT-NULL row). Conjunct
-    survival intersects, mirroring SnapshotBatchReader._keep so the
-    programmatic scan and the format's pushFilters can never disagree
-    on multi-column pruning."""
+    via :func:`bounds_exclude`, ``nulls`` (``{col: is_null}``) via
+    recorded null counts (:func:`null_count_exclude`). Conjunct
+    survival intersects; the scan planner applies this to recorded
+    stats and the batch format reader to partition-path values."""
     return any(
         bounds_exclude(file_stats.get(col), lo, hi)
         for col, lo, hi in preds
     ) or any(
-        null_count_exclude(file_stats.get(col), is_null=False)
-        for col in not_null
+        null_count_exclude(file_stats.get(col), is_null)
+        for col, is_null in (nulls or {}).items()
     )
 
 
-def _translate_not_null(schema_log, commit_rel, not_null):
-    """``(cols, prune_all)``: the physical names backing ``not_null``
-    conjuncts in this commit; ``prune_all=True`` when a conjunct
-    column has no physical backing there (dropped or renamed away —
-    it reads NULL for every row, so IS NOT NULL proves every file in
-    the commit empty)."""
-    if not schema_log:
-        return list(not_null), False
-    out = []
-    for c in not_null:
-        p = _physical_column(schema_log, commit_rel, c)
-        if p is None:
-            return [], True
-        out.append(p)
-    return out, False
+_PRUNE_COUNTERS = (
+    "total_files",
+    "pruned_files",
+    "kept_files",
+    "total_shards",
+    "loaded_shards",
+    "skipped_shards",
+)
+
+
+def _scan_plan(
+    path: str,
+    version: int | None,
+    preds=(),
+    nulls: dict | None = None,
+    manifest: dict | None = None,
+) -> dict:
+    """THE scan planner (Iceberg scan planning): pick a version, prune
+    its data files on manifest stats, attach the deletes that apply.
+    Engine reads, the prune audit, the MoR writers' live-row read, the
+    incremental window and both format readers all plan here, so the
+    audit can never disagree with a scan and a format read can never
+    disagree with the engine.
+
+    ``preds`` are ``(col, lo, hi)`` range conjuncts and ``nulls`` a
+    ``{col: is_null}`` map of IS [NOT] NULL conjuncts, both in LOGICAL
+    names. ``manifest`` (raw or resolved; copied, never mutated)
+    replaces loading ``version``'s. Shards whose hulls prove every
+    file empty are never loaded (:func:`_resolve_manifest`). Recorded
+    bounds are keyed by write-time physical names, so each conjunct
+    translates per commit through the reverse walk
+    :func:`_physical_in_ops` alone: a column with no physical backing
+    in a commit reads NULL there — its range conjunct is skipped
+    (only keeps files), IS NULL holds for every row, IS NOT NULL
+    proves the whole commit empty.
+
+    Returns ``{"version", "manifest"`` (the resolved, maybe
+    shard-pruned view), ``"commits"`` ({rel: surviving files}; commits
+    with none are left out), ``"ops"`` ({rel: schema-log ops}, for
+    every commit of the version that has any), ``"delete_files"``
+    (absolute positional-delete paths), ``"eq_deletes"`` ([{applies_to,
+    files (absolute), cols}]), ``"eq_scope"`` ({rel: [(files, cols)]}
+    of the entries applying to each surviving commit) ``}`` plus the
+    :data:`_PRUNE_COUNTERS`. MoR deletes never widen recorded bounds,
+    so pruning before applying them stays conservative-correct."""
+    nulls = nulls or {}
+    counts: dict[str, int] = {}
+    manifest = _resolve_manifest(
+        path,
+        _load_manifest_raw(path, version) if manifest is None
+        else dict(manifest),
+        prune=list(preds),
+        plan_out=counts,
+    )
+    stats = manifest.get("stats") or {}
+    schema_log = manifest.get("schema_log")
+    commits: dict[str, list[str]] = {}
+    ops: dict[str, list[dict]] = {}
+    # shard-skipped files were proven empty from descriptor hulls
+    total = counts.get("skipped_files", 0)
+    for rel, files in manifest["commits"].items():
+        cops = _schema_ops_for_commit(schema_log, rel)
+        if cops:
+            ops[rel] = cops
+        total += len(files)
+        cpreds = [
+            (phys, lo, hi)
+            for col, lo, hi in preds
+            if (phys := _physical_in_ops(cops, col)) is not None
+        ]
+        cnulls: dict[str, bool] = {}
+        for col, is_null in nulls.items():
+            phys = _physical_in_ops(cops, col)
+            if phys is not None:
+                cnulls[phys] = is_null
+            elif not is_null:
+                break  # IS NOT NULL on an all-NULL column: commit empty
+        else:
+            cstats = stats.get(rel) or {}
+            keep = [
+                f
+                for f in files
+                if not _file_provably_empty(
+                    cstats.get(f) or {}, cpreds, cnulls
+                )
+            ]
+            if keep:
+                commits[rel] = keep
+    eq_deletes = [
+        {
+            "applies_to": list(ent.get("applies_to") or []),
+            "files": [os.path.join(path, drel, f) for f in ent["files"]],
+            "cols": list(ent["cols"]),
+        }
+        for drel, ent in sorted((manifest.get("eq_deletes") or {}).items())
+    ]
+    scopes = [
+        (set(e["applies_to"]), e["files"], e["cols"]) for e in eq_deletes
+    ]
+    kept = sum(len(fs) for fs in commits.values())
+    return {
+        "version": version,
+        "manifest": manifest,
+        "commits": commits,
+        "ops": ops,
+        "delete_files": [
+            os.path.join(path, drel, f)
+            for drel, fs in sorted((manifest.get("deletes") or {}).items())
+            for f in fs
+        ],
+        "eq_deletes": eq_deletes,
+        "eq_scope": {
+            rel: [(fs, cols) for ap, fs, cols in scopes if rel in ap]
+            for rel in commits
+        },
+        "total_files": total,
+        "pruned_files": total - kept,
+        "kept_files": kept,
+        "total_shards": counts.get("total_shards", 0),
+        "loaded_shards": counts.get("loaded_shards", 0),
+        "skipped_shards": counts.get("skipped_shards", 0),
+    }
+
+
+def _window_plan(
+    path: str,
+    from_version: int,
+    to_version: int | None = None,
+    ref: str | None = None,
+) -> dict:
+    """The scan plan of the increment ``(from_version, to_version]``
+    (validated by :func:`fresh_append_commits`) — THE bootstrap rule
+    of :func:`read_appends_between` and the ``snapshot_stream``
+    source. The bootstrap window (``from_version=0``) is the head
+    STATE, so the head's deletes, equality deletes and schema log
+    apply; past it the window is its fresh commit dirs alone:
+    ``fresh_append_commits`` refuses to tail across delete and schema
+    commits, so no vector, key set or log entry can touch them, and a
+    poll stays one-manifest cheap."""
+    to_version, fresh = fresh_append_commits(
+        path, from_version, to_version, ref=ref
+    )
+    if from_version == 0:
+        return _scan_plan(path, to_version)
+    return _scan_plan(path, to_version, manifest={"commits": fresh})
 
 
 def scan_snapshot(
@@ -2405,62 +2546,43 @@ def scan_snapshot(
     applied as a real WHERE. Range conjuncts also exclude all-null
     files on their own — NULL satisfies no range. Version selection
     (``version=`` / ``as_of_timestamp=`` / ``tag=`` / head) is the
-    same :func:`_resolve_version` every read path uses."""
+    same :func:`_resolve_version` every read path uses; the file plan
+    is :func:`_scan_plan`'s."""
     from pyspark.sql import functions as F
 
-    preds = _norm_scan_predicates(column, lower, upper, predicates, not_null)
-    nn = list(not_null or [])
+    preds, nulls = _norm_scan_predicates(
+        column, lower, upper, predicates, not_null
+    )
     version = _resolve_version(path, version, as_of_timestamp, tag, branch)
-    # shard-level skip first (manifest-list hulls): a selective scan
-    # over a many-shard table plans from O(surviving shards) of
-    # metadata, never O(table) — the per-file rule below then prunes
-    # within the shards that did load
-    manifest = _load_manifest(path, version, prune=preds)
-    stats = manifest.get("stats") or {}
-    schema_log = manifest.get("schema_log")
-    pruned: dict[str, list[str]] = {}
-    for commit_rel, files in manifest["commits"].items():
-        cstats = stats.get(commit_rel) or {}
-        # predicates arrive in LOGICAL names; recorded bounds are keyed
-        # by write-time physical names — translate per commit through
-        # the schema log (a range conjunct with no physical backing in
-        # this commit is skipped: its column is NULL there, which
-        # satisfies no range, so skipping only keeps files; a NOT-NULL
-        # conjunct on such a column proves the whole commit empty)
-        cpreds = _translate_pred_conjuncts(schema_log, commit_rel, preds)
-        cnn, prune_all = _translate_not_null(schema_log, commit_rel, nn)
-        if prune_all:
-            continue
-        keep = [
-            f
-            for f in files
-            if not _file_provably_empty(cstats.get(f) or {}, cpreds, cnn)
-        ]
-        if keep:
-            pruned[commit_rel] = keep
-    if not pruned:
+    plan = _scan_plan(path, version, preds, nulls)
+    if not plan["commits"]:
         # every file proven empty: an empty frame with the head schema
-        base = _read_commits(
-            spark, path, manifest["commits"], schema_log=schema_log
+        base = _union_commit_frames(
+            spark, path, plan["manifest"]["commits"],
+            tag=False, ops=plan["ops"],
         )
         return base.where(F.lit(False))
-    # MoR delete vectors / equality deletes never WIDEN recorded
-    # bounds, so stats pruning stays conservative-correct; surviving
-    # files still apply them
-    out = _read_commits(
-        spark,
-        path,
-        pruned,
-        deletes=manifest.get("deletes"),
-        schema_log=schema_log,
-        eq_deletes=manifest.get("eq_deletes"),
-    )
+    out = _read_commits(spark, path, plan)
+    rec = recorded_schema(plan["manifest"])
+    if rec is not None and not set(rec.names) <= set(out.columns):
+        # pruning left out every commit carrying some column: it reads
+        # NULL, so the scan keeps the table's schema whatever survives
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        out = out.select(
+            *[
+                F.col(f.name)
+                if f.name in out.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in from_arrow_schema(rec)
+            ]
+        )
     for col, lo, hi in preds:
         if lo is not None:
             out = out.where(F.col(col) >= F.lit(lo))
         if hi is not None:
             out = out.where(F.col(col) <= F.lit(hi))
-    for col in nn:
+    for col in nulls:
         out = out.where(F.col(col).isNotNull())
     return out
 
@@ -2478,43 +2600,20 @@ def scan_prune_stats(
     branch: str | None = None,
 ) -> dict[str, int]:
     """How much :func:`scan_snapshot` would prune: {total_files,
-    pruned_files, kept_files} from the manifest alone (no Spark, no
-    I/O) — the planning-time audit next to the footer-level
+    pruned_files, kept_files, total_shards, loaded_shards,
+    skipped_shards} from the manifest alone (no Spark, no data I/O) —
+    the planning-time audit next to the footer-level
     :func:`maintenance.skipping_report`. Takes the same single-column,
     ``predicates=[(col, lo, hi), …]``, and ``not_null=[col, …]`` forms
-    as the scan, shares its survival rule, AND its version selection
-    (``version=`` / ``as_of_timestamp=`` / ``tag=`` / head, through
-    the same :func:`_resolve_version`), so the audit can never
-    disagree with the plan — including a tagged or time-travel scan."""
-    preds = _norm_scan_predicates(column, lower, upper, predicates, not_null)
-    nn = list(not_null or [])
+    and the same version selection as the scan, and returns the
+    counters of the very :func:`_scan_plan` the scan reads, so the
+    audit can never disagree with the plan."""
+    preds, nulls = _norm_scan_predicates(
+        column, lower, upper, predicates, not_null
+    )
     version = _resolve_version(path, version, as_of_timestamp, tag, branch)
-    plan: dict[str, int] = {}
-    manifest = _load_manifest(path, version, prune=preds, plan_out=plan)
-    stats = manifest.get("stats") or {}
-    schema_log = manifest.get("schema_log")
-    # shard-skipped files were proven empty from descriptor hulls
-    # without loading their shards: counted as pruned, exactly what
-    # scan_snapshot's plan does
-    total = pruned_n = plan.get("skipped_files", 0)
-    for commit_rel, files in manifest["commits"].items():
-        cstats = stats.get(commit_rel) or {}
-        cpreds = _translate_pred_conjuncts(schema_log, commit_rel, preds)
-        cnn, prune_all = _translate_not_null(schema_log, commit_rel, nn)
-        for f in files:
-            total += 1
-            if prune_all or _file_provably_empty(
-                cstats.get(f) or {}, cpreds, cnn
-            ):
-                pruned_n += 1
-    return {
-        "total_files": total,
-        "pruned_files": pruned_n,
-        "kept_files": total - pruned_n,
-        "total_shards": plan.get("total_shards", 0),
-        "loaded_shards": plan.get("loaded_shards", 0),
-        "skipped_shards": plan.get("skipped_shards", 0),
-    }
+    plan = _scan_plan(path, version, preds, nulls)
+    return {k: plan[k] for k in _PRUNE_COUNTERS}
 
 
 def _schema_ops_for_commit(
@@ -2534,9 +2633,9 @@ def _schema_ops_for_commit(
 def _replay_schema_ops(pairs, ops):
     """Replay schema-log ops over a ``[(name, payload), …]`` sequence —
     THE one forward rename/drop application primitive: every carrier
-    (engine frames, Arrow batches, footer fields, bounds maps, name
-    lists) derives its replay from this, so op semantics can never
-    drift between the engine and format read paths. Returns the
+    of data or schema (engine frames, Arrow batches, footer fields,
+    name lists) derives its replay from this, so op semantics can
+    never drift between the engine and format read paths. Returns the
     surviving ``(new_name, payload)`` pairs in original order."""
     out = list(pairs)
     for e in ops:
@@ -2553,9 +2652,9 @@ def _physical_in_ops(ops: list[dict] | None, logical: str) -> str | None:
     """The reverse walk of one commit's schema ops: the IN-FILE name
     backing ``logical``, or None when it has no physical backing there
     (dropped, or renamed away and later re-added — its value in that
-    commit is NULL). THE shared mapping primitive: manifest-stats
-    translation AND the format reader's row-group pruning / column
-    projection all route through it, so a forward-replay name
+    commit is NULL). THE shared mapping primitive: the scan planner's
+    stats translation AND the format reader's row-group pruning /
+    column projection all route through it, so a forward-replay name
     collision (stale physical stats serving a re-added logical) can
     never reappear in one path only."""
     name = logical
@@ -2573,74 +2672,34 @@ def _physical_in_ops(ops: list[dict] | None, logical: str) -> str | None:
 def _physical_column(
     schema_log: list[dict] | None, commit_rel: str, logical: str
 ) -> str | None:
-    """The IN-FILE column name backing logical column ``logical`` for
-    files in ``commit_rel`` — the reverse walk of the schema log that
-    lets manifest stats (recorded under write-time physical names)
-    serve predicates phrased in current logical names. Returns None
-    when the logical column has no physical backing in this commit
-    (dropped, or renamed away and later re-added): its value there is
-    NULL, so no recorded bound may be used (files stay conservatively
-    unpruned)."""
+    """:func:`_physical_in_ops` over ``commit_rel``'s ops in the log:
+    the IN-FILE column name backing logical column ``logical`` for
+    files in that commit, or None when it has no physical backing
+    there (its value is NULL, so no recorded bound may serve it)."""
     return _physical_in_ops(
         _schema_ops_for_commit(schema_log, commit_rel), logical
     )
 
 
-def _translate_pred_conjuncts(
-    schema_log: list[dict] | None, commit_rel: str, preds
-) -> list[tuple]:
-    """Range conjuncts (logical names) → this commit's physical names,
-    dropping conjuncts with no physical backing (their column is NULL
-    in this commit — NULL satisfies no range, so skipping the conjunct
-    only KEEPS files, never wrongly prunes)."""
-    if not schema_log:
-        return list(preds)
-    out = []
-    for col, lo, hi in preds:
-        phys = _physical_column(schema_log, commit_rel, col)
-        if phys is not None:
-            out.append((phys, lo, hi))
-    return out
+def _read_commits(spark: SparkSession, path: str, plan: dict) -> DataFrame:
+    """Turn a :func:`_scan_plan` into a DataFrame — the one place the
+    engine's file lists become frames (read_snapshot, scan_snapshot,
+    incremental reads and compaction go through here). The plan must
+    hold at least one data file: a version with NO files anywhere has
+    no schema to plan and raises.
 
-
-def _read_commits(
-    spark: SparkSession,
-    path: str,
-    commits: dict[str, list[str]],
-    deletes: dict[str, list[str]] | None = None,
-    schema_log: list[dict] | None = None,
-    eq_deletes: dict[str, dict] | None = None,
-) -> DataFrame:
-    """Plan a read over manifest-listed commit dirs — the one place
-    file lists become DataFrames (read_snapshot AND incremental reads
-    go through here, so read planning can never diverge between
-    them). ``commits`` must hold at least one data file: zero-file
-    commit entries (an empty frame written through the format API —
-    engine-side writes always stage a schema-carrying empty part) are
-    skipped; a version with NO files anywhere has no schema to plan
-    and raises.
-
-    ``deletes`` is the manifest's positional-delete map (merge-on-read
-    DML, :func:`snapshot_delete_mor`): when present, rows listed in
-    the delete vectors are anti-joined out; a table with no MoR
-    deletes pays ZERO overhead (no metadata columns, identical plan to
-    before).
-
-    ``schema_log`` is the manifest's metadata-only rename/drop history
-    (:func:`snapshot_rename_column` / :func:`snapshot_drop_column`):
-    version-gated per commit dir, applied as plan-time projections —
-    a table that never evolved pays nothing."""
-    if not deletes and not eq_deletes:
+    The plan's positional-delete files (merge-on-read DML,
+    :func:`snapshot_delete_mor`) and equality deletes are anti-joined
+    out; a plan with neither pays ZERO overhead (no metadata columns,
+    no joins). Its per-commit schema-log ops
+    (:func:`snapshot_rename_column` / :func:`snapshot_drop_column`)
+    apply as plan-time projections — a table that never evolved pays
+    nothing."""
+    if not plan["delete_files"] and not plan["eq_deletes"]:
         return _union_commit_frames(
-            spark, path, commits, tag=False, schema_log=schema_log
+            spark, path, plan["commits"], tag=False, ops=plan["ops"]
         )
-    state = {
-        "commits": commits,
-        "deletes": deletes,
-        "schema_log": schema_log,
-        "eq_deletes": eq_deletes,
-    }
-    return _live_rows(spark, path, state).drop(*_TAG_COLS)
+    return _live_rows(spark, path, plan).drop(*_TAG_COLS)
 
 
 # row provenance of a tagged read: ``__snap_file`` (data file path
@@ -2652,20 +2711,16 @@ def _read_commits(
 _TAG_COLS = ("__snap_file", "__snap_pos", "__snap_rel")
 
 
-def _live_rows(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
-    """The LIVE rows of a manifest's state — positional delete vectors
-    and equality deletes applied — with the :data:`_TAG_COLS`
+def _live_rows(spark: SparkSession, path: str, plan: dict) -> DataFrame:
+    """The LIVE rows of a :func:`_scan_plan` — positional delete
+    vectors and equality deletes applied — with the :data:`_TAG_COLS`
     provenance kept: the read every MoR writer plans against, and the
     deletes-bearing branch of :func:`_read_commits`."""
     tagged = _union_commit_frames(
-        spark,
-        path,
-        manifest["commits"],
-        tag=True,
-        schema_log=manifest.get("schema_log"),
+        spark, path, plan["commits"], tag=True, ops=plan["ops"]
     )
-    live = _apply_delete_vectors(spark, path, tagged, manifest.get("deletes"))
-    return _apply_eq_deletes(spark, path, live, manifest.get("eq_deletes"))
+    live = _apply_delete_vectors(spark, tagged, plan["delete_files"])
+    return _apply_eq_deletes(spark, live, plan["eq_deletes"])
 
 
 def _union_commit_frames(
@@ -2673,15 +2728,16 @@ def _union_commit_frames(
     path: str,
     commits: dict[str, list[str]],
     tag: bool,
-    schema_log: list[dict] | None = None,
+    ops: dict[str, list[dict]] | None = None,
 ) -> DataFrame:
     """The ONE commit-dirs → DataFrame loop (plain and provenance-tagged
     reads share it, so schema-evolution or error-message fixes can
-    never drift between the two paths). Schema-log entries applying to
-    a commit are replayed over its frame in log order (rename → a
-    zero-cost plan projection; drop → the physical column is hidden so
-    a later same-name add never aliases onto it) before the
-    union-by-name merges the per-commit schemas."""
+    never drift between the two paths). ``ops`` ({commit_rel:
+    schema-log ops}, a plan's ``"ops"``) are replayed over each
+    commit's frame in log order (rename → a zero-cost plan projection;
+    drop → the physical column is hidden so a later same-name add
+    never aliases onto it) before the union-by-name merges the
+    per-commit schemas."""
     from pyspark.sql import functions as F
 
     guard = _hook("table_read_guard")
@@ -2697,9 +2753,9 @@ def _union_commit_frames(
         df = spark.read.option("basePath", commit_abs).parquet(
             *[os.path.join(commit_abs, f) for f in files]
         )
-        ops = _schema_ops_for_commit(schema_log, commit_rel)
-        if ops:
-            pairs = _replay_schema_ops([(c, c) for c in df.columns], ops)
+        cops = (ops or {}).get(commit_rel)
+        if cops:
+            pairs = _replay_schema_ops([(c, c) for c in df.columns], cops)
             df = df.select(
                 *[F.col(orig).alias(new) for new, orig in pairs]
             )
@@ -2738,30 +2794,24 @@ def _union_commit_frames(
 
 
 def _apply_delete_vectors(
-    spark: SparkSession,
-    path: str,
-    tagged: DataFrame,
-    deletes: dict[str, list[str]] | None,
+    spark: SparkSession, tagged: DataFrame, delete_files: list[str]
 ) -> DataFrame:
-    """Anti-join a tagged frame against the manifest's positional
-    delete vectors. The delete side BROADCASTS: merge-on-read
-    is for scattered row-level deletes between compactions, so vector
-    volume is bounded by compaction cadence, not table size — when
-    vectors grow large, :func:`snapshot_compact` materializes them and
-    the next read pays nothing. Keeps the provenance tags (callers
-    drop them)."""
+    """Anti-join a tagged frame against a plan's positional delete
+    vectors (absolute parquet paths). The delete side BROADCASTS:
+    merge-on-read is for scattered row-level deletes between
+    compactions, so vector volume is bounded by compaction cadence,
+    not table size — when vectors grow large, :func:`snapshot_compact`
+    materializes them and the next read pays nothing. Keeps the
+    provenance tags (callers drop them)."""
     from pyspark.sql import functions as F
 
-    if not deletes:
+    if not delete_files:
         return tagged
-    files = [
-        os.path.join(path, drel, f)
-        for drel, fs in sorted(deletes.items())
-        for f in fs
-    ]
-    if not files:
-        return tagged
-    dv = spark.read.parquet(*files).select("file_path", "pos").distinct()
+    dv = (
+        spark.read.parquet(*delete_files)
+        .select("file_path", "pos")
+        .distinct()
+    )
     return tagged.join(
         F.broadcast(dv),
         (tagged["__snap_file"] == dv["file_path"])
@@ -2771,14 +2821,11 @@ def _apply_delete_vectors(
 
 
 def _apply_eq_deletes(
-    spark: SparkSession,
-    path: str,
-    tagged: DataFrame,
-    eq_deletes: dict[str, dict] | None,
+    spark: SparkSession, tagged: DataFrame, eq_deletes: list[dict]
 ) -> DataFrame:
-    """Anti-join a tagged frame against the manifest's EQUALITY
-    delete files — Iceberg v2's second delete flavor: each
-    entry is a small parquet of key rows written with ZERO table reads
+    """Anti-join a tagged frame against a plan's EQUALITY delete
+    entries — Iceberg v2's second delete flavor: each entry is a small
+    parquet of key rows written with ZERO table reads
     (:func:`snapshot_delete_eq`), scoped to the data commit dirs that
     existed when it committed (``applies_to``, the sequence-number
     rule: rows appended later are never its victims). Matching is
@@ -2789,16 +2836,11 @@ def _apply_eq_deletes(
     ``rewrite_data_files`` materialize them away."""
     from pyspark.sql import functions as F
 
-    if not eq_deletes:
-        return tagged
     out = tagged
-    for drel in sorted(eq_deletes):
-        ent = eq_deletes[drel]
-        applies = ent.get("applies_to") or []
-        files = [os.path.join(path, drel, f) for f in ent["files"]]
+    for ent in eq_deletes:
+        applies, files, cols = ent["applies_to"], ent["files"], ent["cols"]
         if not applies or not files:
             continue
-        cols = list(ent["cols"])
         keys = (
             spark.read.parquet(*files)
             .select([F.col(c).alias(f"__eqk_{c}") for c in cols])
@@ -3057,7 +3099,7 @@ def snapshot_merge_mor(
         head = current_version(path)
         if head is None:
             raise FileNotFoundError(f"no snapshots at {path}")
-        live = _live_rows(spark, path, _load_manifest(path, head))
+        live = _live_rows(spark, path, _scan_plan(path, head))
         missing = [
             c for c in live.columns
             if c not in _TAG_COLS and c not in updates.columns
@@ -3114,7 +3156,7 @@ def snapshot_update_mor(
         head = current_version(path)
         if head is None:
             raise FileNotFoundError(f"no snapshots at {path}")
-        live = _live_rows(spark, path, _load_manifest(path, head))
+        live = _live_rows(spark, path, _scan_plan(path, head))
         unknown = [c for c in set_exprs if c not in live.columns]
         if unknown:
             raise ValueError(f"SET on unknown column(s): {unknown}")
@@ -3190,7 +3232,7 @@ def snapshot_delete_mor(
         # plan against LIVE rows only (existing vectors applied): a
         # re-delete of an already-deleted position would be harmless
         # but bloats vectors; this keeps them minimal
-        live = _live_rows(spark, path, _load_manifest(path, head))
+        live = _live_rows(spark, path, _scan_plan(path, head))
         delete_rel, files = _stage_delete_vector(
             path, head, live.where(predicate.eqNullSafe(True)), staged
         )
@@ -3358,40 +3400,25 @@ def delete_debt(path: str, version: int | None = None) -> dict:
     this version pays a broadcast anti-join over ``deleted_rows``
     positions until an overwrite materializes them. Footer-count only
     (driver-side, ~ms per vector file, no Spark). Returns
-    ``{"data_files", "delete_files", "deleted_rows"}``."""
+    ``{"data_files", "delete_files", "deleted_rows", "eq_delete_files",
+    "eq_deleted_keys"}`` — the files and rows of the deletes its
+    :func:`_scan_plan` attaches (equality-delete debt counted the same
+    footer-only way: each live entry costs readers one broadcast
+    anti-join until compaction materializes it)."""
     import pyarrow.parquet as pq
 
-    if version is None:
-        version = current_version(path)
-        if version is None:
-            raise FileNotFoundError(f"no snapshots at {path}")
-    manifest = _load_manifest(path, version)
-    data_files = sum(len(fs) for fs in manifest["commits"].values())
-    deletes = manifest.get("deletes") or {}
-    n_files = n_rows = 0
-    for drel, fs in deletes.items():
-        for f in fs:
-            n_files += 1
-            n_rows += pq.ParquetFile(
-                os.path.join(path, drel, f)
-            ).metadata.num_rows
-    # equality-delete debt, counted the same footer-only way: each
-    # live entry costs readers one broadcast anti-join until
-    # compaction materializes it
-    eq = manifest.get("eq_deletes") or {}
-    eq_files = eq_keys = 0
-    for drel, ent in eq.items():
-        for f in ent.get("files") or []:
-            eq_files += 1
-            eq_keys += pq.ParquetFile(
-                os.path.join(path, drel, f)
-            ).metadata.num_rows
+    plan = _scan_plan(path, _resolve_version(path, version))
+    eq_files = [f for ent in plan["eq_deletes"] for f in ent["files"]]
+
+    def rows(files):
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
     return {
-        "data_files": data_files,
-        "delete_files": n_files,
-        "deleted_rows": n_rows,
-        "eq_delete_files": eq_files,
-        "eq_deleted_keys": eq_keys,
+        "data_files": plan["total_files"],
+        "delete_files": len(plan["delete_files"]),
+        "deleted_rows": rows(plan["delete_files"]),
+        "eq_delete_files": len(eq_files),
+        "eq_deleted_keys": rows(eq_files),
     }
 
 
@@ -3407,11 +3434,7 @@ def stats_coverage(path: str, version: int | None = None) -> dict:
     Backfill with :func:`snapshot_compact` (``stats_cols=`` or plain,
     if the table property is already set): the rewrite lands every row
     in fresh, statted files."""
-    if version is None:
-        version = current_version(path)
-        if version is None:
-            raise FileNotFoundError(f"no snapshots at {path}")
-    manifest = _load_manifest(path, version)
+    manifest = _load_manifest(path, _resolve_version(path, version))
     cols = list(manifest.get("stats_cols") or [])
     stats = manifest.get("stats") or {}
     schema_log = manifest.get("schema_log")
@@ -3651,10 +3674,7 @@ def snapshot_rewrite_data_files(
         df = _read_commits(
             spark,
             path,
-            selected,
-            deletes=deletes,
-            schema_log=manifest.get("schema_log"),
-            eq_deletes=eq_deletes_head,
+            _scan_plan(path, head, manifest={**manifest, "commits": selected}),
         )
         n = target_partitions or max(
             1, min(spark.sparkContext.defaultParallelism, n_sel)
@@ -3847,31 +3867,13 @@ def read_appends_between(
     "successfully" drop data. Cost per poll is O(window): only the
     manifests inside (from, to] are parsed (version discovery is
     filename-based), never the table's whole history. Planning and
-    validation live in :func:`fresh_append_commits`, SHARED with the
+    validation live in :func:`_window_plan`, SHARED with the
     ``snapshot_stream`` streaming source so the batch and stream
     incremental paths can never drift."""
-    to_version, fresh = fresh_append_commits(path, from_version, to_version)
-    if not fresh:
-        return read_snapshot(spark, path, version=to_version).limit(0)
-    # the bootstrap window is the head STATE, so the head's positional
-    # delete vectors apply (a plain file read would resurrect
-    # MoR-deleted rows); past the bootstrap no vector can exist in the
-    # window — fresh_append_commits refuses to tail across a delete op
-    # only the bootstrap window needs the head manifest's extras: past
-    # it, no delete vector or schema-log entry can touch the all-fresh
-    # window dirs (fresh_append_commits refuses to tail ACROSS delete
-    # and schema commits) — so a non-bootstrap poll stays one-manifest
-    # cheap, the O(window) contract of the docstring
-    dels = schema_log = eq_dels = None
-    if from_version == 0:
-        head_manifest = _load_manifest(path, to_version)
-        dels = head_manifest.get("deletes")
-        schema_log = head_manifest.get("schema_log")
-        eq_dels = head_manifest.get("eq_deletes")
-    return _read_commits(
-        spark, path, fresh, deletes=dels, schema_log=schema_log,
-        eq_deletes=eq_dels,
-    )
+    plan = _window_plan(path, from_version, to_version)
+    if not plan["commits"]:
+        return read_snapshot(spark, path, version=plan["version"]).limit(0)
+    return _read_commits(spark, path, plan)
 
 
 def snapshot_rollback(path: str, to_version: int) -> int:
